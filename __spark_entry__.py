@@ -24,18 +24,12 @@ from smqtk_indexing_spark.functions import metrics as M
 from smqtk_indexing_spark.functions import text as TX
 from smqtk_indexing_spark.functions.text import LANG_MARKERS, _STOPWORDS
 from smqtk_indexing_spark.operators import ann, dedup
-from smqtk_indexing_spark.operators.candidates import (
-    band_buckets,
-    candidate_pairs_local,
-)
+from smqtk_indexing_spark.operators.candidates import band_buckets, candidate_pairs
 from smqtk_indexing_spark.operators.cluster import connected_components
 from smqtk_indexing_spark.operators.multimodal import extract_features, to_assets
-from smqtk_indexing_spark.operators.signatures import (
-    compute_shingle_arrays,
-    compute_signatures,
-)
+from smqtk_indexing_spark.operators.signatures import compute_signatures
 from smqtk_indexing_spark.operators.substrings import substring_pairs
-from smqtk_indexing_spark.operators.verify import verify_pairs
+from smqtk_indexing_spark.operators.verify import verify_candidates
 
 CFG = DedupConfig()
 K = CFG.shingle_k
@@ -140,7 +134,7 @@ def _full_dedup_all(spark, sf_dir: str):
 
 def _docs_count(spark, sf_dir: str) -> int:
     """Memoized corpus row count (parquet metadata count — no data scan).
-    Gates scale-only materializations like the ranked-hot-bucket persist;
+    Bounds id sets for size-gated broadcasts (the verify fetch);
     testdata is immutable per the driver contract, so the count is a pure
     function of sf_dir alone — keyed by path only (ADVICE r5: an id()-based
     key whose int value does not pin the context could alias a recycled
@@ -189,14 +183,13 @@ def _memo_evict_stopped() -> None:
 
 
 def _lsh_pairs(spark, sf_dir, materialize: bool = True):
-    # Lean dataflow (same shape as plans/pipeline.py:152-175): the signature
-    # pass carries ONLY band keys (~300 B/doc); shingle arrays are computed a
-    # second time for CANDIDATE docs only, instead of Arrow-shipping every
-    # doc's full shingle set through the whole DAG. ``cand`` feeds both the
-    # id fetch and the verify join, so it is persisted — without it the full
-    # tokenize+minhash mapInPandas pass re-runs once per DAG branch (~3x the
-    # signature cost, the round-1 near_dup_pairs_lsh bottleneck).
-    # ``materialize=False`` returns the PURE LAZY plan (no persist, no
+    # Lean dataflow, the pipeline's (plans/pipeline.py run_dedup): the
+    # signature pass carries ONLY band keys (~300 B/doc); shingle arrays are
+    # computed a second time for CANDIDATE docs only (verify_candidates).
+    # ``cand`` feeds both the id fetch and the verify join, so it is
+    # persisted — without it the tokenize+minhash mapInPandas pass re-runs
+    # once per DAG branch (the round-1 near_dup_pairs_lsh bottleneck).
+    # ``materialize=False`` returns the PURE LAZY plan (no cache, no
     # checkpoint, no memo) — for plan capture (tools/explain_plans.py).
     _memo_evict_stopped()
     key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
@@ -205,68 +198,26 @@ def _lsh_pairs(spark, sf_dir, materialize: bool = True):
         return hit
     docs = _docs(spark, sf_dir)
     sigs = compute_signatures(docs, CFG, include=("bands",))
-    buckets = band_buckets(sigs, CFG)
-    # r07: all-mode candidates come from candidates.candidate_pairs_local —
-    # ONE bucket-key exchange + a per-partition kernel (exact local sizes,
-    # small buckets enumerated in place, giants striped into the same
-    # salted block rows) instead of the ranked-hot-bucket derivation
-    # (sizes groupBy + AQE join-back + rank window) and its persist gate.
-    # Identical pair set (oracle-gated); the single-consumer dataflow also
-    # runs the signature pass exactly once, so the ranked_persist_min_docs
-    # materialization gate is moot on this path (the pipeline twin keeps
-    # the hybrid generator + ranked checkpoint stage). Measured at sf1.0
-    # local[32]: candidate stage 3.5 s -> ~1 s, query 5.9 s -> ~3.7 s.
-    sh = None
-    cand = candidate_pairs_local(buckets, CFG)
+    cand = candidate_pairs(band_buckets(sigs, CFG), CFG)
     if materialize:
         cand = cand.persist()
+    caches: list = []
     try:
-        cand_ids = (
-            cand.select(F.col("a").alias("doc_id"))
-            .unionAll(cand.select(F.col("b").alias("doc_id")))
-            .distinct()
+        out, caches = verify_candidates(
+            cand, docs, CFG, _docs_count(spark, sf_dir)
         )
-        # Size-gated content fetch, same rule as the pipeline twin
-        # (plans/pipeline.py build_dup_pairs): under cfg.broadcast_id_cap
-        # docs, broadcast the id set so content never leaves its scan
-        # partitions; above it, shuffle-hash + core-count repartition.
-        # The shingle persist below is BEST-EFFORT: everything here
-        # materializes in one localCheckpoint action, and two concurrent
-        # branch stages can race past an un-counted cache (each computing
-        # the pass once — the pre-persist behavior, no worse). The
-        # pipeline twin materializes eagerly with .count() instead,
-        # because there the pass is the measured multi-second cost
-        # (9.0 s -> 1.8 s); at driver-query SF the pass is ~0.3 s and the
-        # extra eager jobs cost more than the race loses (A/B measured:
-        # lazy 2.6 s vs eager 3.1 s per query).
-        if not materialize or _docs_count(spark, sf_dir) <= CFG.broadcast_id_cap:
-            # (plan capture takes the broadcast branch without the count job)
-            cand_docs = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        else:
-            width = max(
-                CFG.shuffle_partitions,
-                2 * spark.sparkContext.defaultParallelism,
-            )
-            cand_docs = docs.join(
-                cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(width)
-        sh = compute_shingle_arrays(cand_docs, CFG)
-        if materialize:
-            sh = sh.persist()
-        out = verify_pairs(cand, sh, CFG)
         if not materialize:
             return out
-        # materialize the (small, tau-filtered) pair set NOW so the big
-        # candidate cache is released before returning — no cached
-        # intermediates survive a queries() run (round-2 VERDICT item 8)
+        # materialize the (small, tau-filtered) pair set NOW so the caches
+        # are released before returning — no cached intermediates survive
+        # a queries() run (round-2 VERDICT item 8)
         out = out.localCheckpoint(eager=True)
         _PAIR_MEMO[key] = out
         return out
     finally:
-        if materialize:
-            cand.unpersist()
-            if sh is not None:
-                sh.unpersist()
+        cand.unpersist()
+        for c in caches:
+            c.unpersist()
 
 
 def q_near_dup_pairs_lsh(spark, sf_dir):

@@ -41,6 +41,8 @@ def main() -> None:
             i += 2
         elif a == "--repeats":
             repeats = int(args[i + 1])
+            if repeats < 1:
+                sys.exit("--repeats must be >= 1")
             i += 2
         elif a == "--noop":
             noop = True
@@ -78,6 +80,7 @@ def main() -> None:
         qs[name](spark, warm_dir).count()
         samples = []
         steals = []
+        rows = []
         for _ in range(repeats):
             s0 = _steal_counters()
             t0 = time.time()
@@ -89,9 +92,10 @@ def main() -> None:
                 n = df.count()
             samples.append(round(time.time() - t0, 3))
             steals.append(_steal_pct(s0, _steal_counters()))
+            rows.append(n)
             print(f"  {name}: {n} rows in {samples[-1]}s (steal {steals[-1]}%)",
                   file=sys.stderr)
-        out[name] = {"samples": samples, "steal_pct": steals, "rows": n}
+        out[name] = {"samples": samples, "steal_pct": steals, "rows": rows}
     print(json.dumps({"sf_dir": sf_dir, "noop": noop, "queries": out}))
     spark.stop()
 

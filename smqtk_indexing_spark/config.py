@@ -45,13 +45,15 @@ class DedupConfig:
     # to the brute-force SQL. 0 disables.
     minhash_prefilter: float = 0.5
     # --- skew / scale ---
-    max_bucket_pairs_per_task: int = 5_000_000  # salt blocks above this
-    salt_block_rows: int = 1024   # target member-rows per salted block
-    bucket_cap: int = 100_000     # drop pathological buckets larger than this
+    # candidate generation (operators/candidates.py candidate_pairs):
+    # buckets above salt_block_rows members are striped into salted block
+    # pairs (all mode) or member chunks of this size (star mode)
+    salt_block_rows: int = 1024
+    bucket_cap: int = 100_000     # all mode drops buckets larger than this
     # candidate topology: "all" = every co-bucketed pair (exact pair-set
     # semantics, quadratic in bucket size); "star" = member->bucket-min
-    # edges (linear; preserves cluster connectivity — the 10^12-file
-    # default for the clustering pipeline; see operators/candidates.py)
+    # edges (linear, no cap; preserves cluster connectivity — the
+    # 10^12-file topology for the clustering pipeline)
     pair_mode: str = "all"
     # While the corpus (hence the candidate-id set, which is a subset of
     # doc ids) is at most this many rows, the verify-side content fetch
@@ -62,13 +64,7 @@ class DedupConfig:
     # serialized / a low-hundreds-MB hash relation per executor. Above it:
     # shuffle-hash join (never sort-merge — SMJ would sort the content).
     broadcast_id_cap: int = 4_000_000
-    # Materialize the shared ranked-hot-bucket table (candidates.
-    # ranked_hot_buckets) only at/above this corpus row count. Below it the
-    # persist's extra materialization jobs cost more than the duplicated
-    # lazy derivation they avoid (round-5 A/B at sf0.1=5k docs, warm, 3
-    # trials: lazy 3.45-3.56 s vs persisted 3.65-3.92 s per query); above
-    # it the persist halves the cand stage (round-4 at 400k docs, local[8]:
-    # ~22 s -> ~9 s). Shared by the driver entry and the pipeline twin.
+    # unread: perfbench/test_layertrace.py builds DedupConfig(ranked_persist_min_docs=0)
     ranked_persist_min_docs: int = 50_000
     # --- substring / CDC ---
     cdc_window: int = 8           # rolling-hash window (chars)

@@ -147,7 +147,9 @@ def _bruteforce_topk_blocked(
                     # neighbor_id asc via the stable sorts
                     key = sc.copy() if ascending else -sc
                     key[np.isnan(key)] = np.inf if ascending else -np.inf
-                    key[qids[:, None] == cids[ts:te][None, :]] = np.inf
+                    # self pairs: NaN, which the stable argsort places
+                    # strictly after every score sentinel, +inf included
+                    key[qids[:, None] == cids[ts:te][None, :]] = np.nan
                     kk2 = min(kk, te - ts)
                     ordt = np.argsort(key, axis=1, kind="stable")[:, :kk2]
                     pool_k.append(key[rows, ordt])
@@ -171,8 +173,11 @@ def _bruteforce_topk_blocked(
     out = base.mapInPandas(
         gen, schema="query_id long, neighbor_id long, rank int, score double"
     )
+    # the pandas -> Arrow handoff turns a NaN score into null; every row
+    # has a score, so null can only be NaN
+    score = F.coalesce("score", F.lit(float("nan")))
     return out.select(
-        "query_id", "neighbor_id", "rank", F.round("score", 6).alias("score")
+        "query_id", "neighbor_id", "rank", F.round(score, 6).alias("score")
     )
 
 
@@ -658,25 +663,18 @@ def rp_lsh_topk(
     collapse such boilerplate; the drop profile is observable via
     ``candidates.bucket_stats`` on the bucket table).
 
-    Candidate generation reuses the dedup path's hybrid generator
-    (``candidates.candidate_pairs``; round-3 VERDICT item 1): small
-    buckets go through a window-rank co-partitioned self-join (codegen,
-    one exchange), and buckets above ``salt_block_rows`` are striped into
-    salted block pairs spread over the whole cluster — the previous
-    in-row explode emitted a giant bucket's ~m^2 candidate rows from ONE
-    row, which no task split can parallelize. Pairs come back undirected
-    (a < b), so each cosine is computed ONCE and then emitted in both
-    (query, neighbor) directions before ranking — halving the re-rank
-    arithmetic vs the directed-candidate shape.
-
-    r07: candidates come from ``candidates.candidate_pairs_local`` — one
-    bucket-key exchange + a per-partition kernel with the same
-    small/salted-giant split (see that docstring; pair sets identical,
-    isolated A/B at the 20k-vector bench corpus: cand stage 4.4 s ->
-    ~1.5 s) — and with ``materialize`` (default) the (n*k)-row result is
-    checkpointed eagerly so certificate consumers' repeat actions reuse it.
+    Candidate generation is the dedup path's generator
+    (``candidates.candidate_pairs`` in all mode): one bucket-key exchange
+    and a streaming kernel; buckets above ``salt_block_rows`` are striped
+    into salted block pairs spread over the whole cluster, so no single
+    task enumerates a giant bucket's ~m^2 pairs. Pairs come back
+    undirected (a < b), so each cosine is computed ONCE and then emitted
+    in both (query, neighbor) directions before ranking — halving the
+    re-rank arithmetic vs the directed-candidate shape. With
+    ``materialize`` (default) the (n*k)-row result is checkpointed eagerly
+    so certificate consumers' repeat actions reuse it;
     ``materialize=False`` keeps the plan fully lazy for plan capture."""
-    from smqtk_indexing_spark.operators.candidates import candidate_pairs_local
+    from smqtk_indexing_spark.operators.candidates import candidate_pairs
 
     sigs = rp_signatures(emb, 64, seed, id_col, vec_col)
     width = 64 // bands
@@ -696,9 +694,12 @@ def rp_lsh_topk(
         ).alias("band_hash"),
     )
     cfg = replace(
-        DEFAULT_CONFIG, bucket_cap=bucket_cap, salt_block_rows=salt_block_rows
+        DEFAULT_CONFIG,
+        bucket_cap=bucket_cap,
+        salt_block_rows=salt_block_rows,
+        pair_mode="all",
     )
-    cand = candidate_pairs_local(bucketed, cfg)
+    cand = candidate_pairs(bucketed, cfg)
     # exact cosine re-rank once per undirected pair, via the broadcast
     # corpus matrix instead of two vector-fetch joins + an interpreted
     # per-pair Catalyst fold (see _pair_cosines_bcast; bit-identical

@@ -109,7 +109,6 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 50,
-    fused_rounds: int = 1,
     driver_edge_cap: int = 2_000_000,
 ) -> DataFrame:
     """(a, b) undirected edges -> (doc_id, cluster_id=min of component).
@@ -130,17 +129,6 @@ def connected_components(
     alone are O(corpus) and must never be collected. Labels are identical
     on both paths (component minimum; parity pytest on random graphs).
     ``driver_edge_cap=0`` forces the distributed path.
-
-    ``fused_rounds`` large/small-star rounds run per materialized job.
-    MEASURED ANTI-OPTIMIZATION above 1 (round-2 VERDICT item 6 tried and
-    rejected with data): the star DAG references its input several times,
-    so the unoptimized plan grows ~4x per fused round and Catalyst
-    optimization time dominates — sf0.1 wall 2.2 s at 1, 4.9 s at 2,
-    30.5 s at 3. Convergence semantics are safe at any value (each star
-    step strictly decreases the Kiveris et al. potential until the
-    star-graph fixpoint, so a fused-step fingerprint repeat implies every
-    inner step was a fixpoint), but job-count savings never repay the
-    optimizer blowup; kept parameterized as documentation of the result.
     """
     e_lazy = (
         edges.select(
@@ -200,10 +188,7 @@ def connected_components(
         # checkpoint still truncates the logical plan every round (the
         # star DAG references its input several times, so an untruncated
         # plan grows ~4x per round and optimizer time explodes).
-        e2 = e
-        for _ in range(max(1, fused_rounds)):
-            e2 = _small_star(_large_star(e2))
-        e2 = e2.localCheckpoint(eager=False)
+        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
         sig2 = _sig(e2)
         old = e
         e = e2

@@ -27,18 +27,11 @@ from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
 from smqtk_indexing_spark.operators import dedup as X
-from smqtk_indexing_spark.operators.candidates import (
-    band_buckets,
-    candidate_pairs,
-    ranked_hot_buckets,
-)
+from smqtk_indexing_spark.operators.candidates import band_buckets, candidate_pairs
 from smqtk_indexing_spark.operators.cluster import connected_components
-from smqtk_indexing_spark.operators.signatures import (
-    compute_shingle_arrays,
-    compute_signatures,
-)
+from smqtk_indexing_spark.operators.signatures import compute_signatures
 from smqtk_indexing_spark.operators.substrings import substring_pairs
-from smqtk_indexing_spark.operators.verify import verify_pairs
+from smqtk_indexing_spark.operators.verify import verify_candidates
 
 LINEAGE_SCHEMA = (
     "stage string, rows_out long, n_partitions int, wall_ms long, "
@@ -224,87 +217,18 @@ def run_dedup(
     sigs = sigs_all.join(reps_ids, "doc_id", "left_semi")
 
     buckets = band_buckets(sigs, cfg)
-    if cfg.pair_mode == "all" and n_docs >= cfg.ranked_persist_min_docs:
-        # materialize the shared ranked-hot-bucket table as its own stage:
-        # every all-mode candidate branch (x/y self-join sides, giant
-        # striping) reads it, and unmaterialized each branch re-derives
-        # the explode + size join + rank window (round-4: this halved the
-        # cand_pairs stage wall at local[8]). Size-gated on the SAME
-        # config constant as the driver entry (cfg.ranked_persist_min_docs
-        # — below it the extra stage materialization costs more than the
-        # duplicated lazy derivation; A/B numbers in config.py).
-        ranked = ck.run(
-            "hot_buckets", lambda: ranked_hot_buckets(buckets, cfg), res
-        )
-        cand = ck.run(
-            "cand_pairs",
-            lambda: candidate_pairs(buckets, cfg, ranked=ranked),
-            res,
-        )
-    else:
-        cand = ck.run(
-            "cand_pairs", lambda: candidate_pairs(buckets, cfg), res
-        )
-
-    def build_dup_pairs() -> DataFrame:
-        cand_ids = (
-            cand.select(F.col("a").alias("doc_id"))
-            .unionAll(cand.select(F.col("b").alias("doc_id")))
-            .distinct()
-        )
-        # Content fetch strategy is SIZE-GATED on the corpus row count
-        # (known for free from the member_map lineage row; cand_ids is a
-        # subset of doc ids so it is bounded by it): under
-        # cfg.broadcast_id_cap the id set is BROADCAST and the content
-        # rows never leave their scan partitions — no exchange, no
-        # repartition (scan splits already give several waves per core,
-        # session.py maxPartitionBytes). Above the cap: shuffle-hash join
-        # (build side = ids, content side never sorted; SMJ would
-        # sort/spill it) + a core-count repartition, because UDF stages
-        # need partition counts that follow CORES, not bytes — the
-        # semi-join output's byte-sized partitioning starves / skews the
-        # Arrow pass (measured round 4 at local[8]: 9.3 s on the join's
-        # 16 partitions vs 4.3 s repartitioned to 4 waves per core).
-        n_docs = next(
-            (row[1] for row in res.lineage if row[0] == "member_map"), None
-        )
-        if n_docs is not None and n_docs <= cfg.broadcast_id_cap:
-            cand_docs = base.join(
-                F.broadcast(cand_ids), "doc_id", "left_semi"
-            )
-        else:
-            width = max(
-                cfg.shuffle_partitions,
-                4 * spark.sparkContext.defaultParallelism,
-            )
-            cand_docs = base.join(
-                cand_ids.hint("shuffle_hash"), "doc_id", "left_semi"
-            ).repartition(width)
-        # Materialization boundary between the content exchange and the
-        # Arrow shingle pass (round-2 VERDICT item 4): fused, the stage
-        # runs every core's JVM shuffle task AND its python worker
-        # concurrently — 2x runnable threads per core — which anti-scales
-        # once task slots cover all vCPUs (measured on the 800k-file
-        # corpus: fused 6.9 s at local[8] but 24.0 s at local[32];
-        # decomposed 8.3 s / 9.8 s). persist + count (not
-        # localCheckpoint): same eager boundary, but unpersist() actually
-        # releases cache-manager blocks (ADVICE r3).
-        cand_docs = cand_docs.persist()
-        cand_docs.count()
-        # persist + materialize the SHINGLE table too: it feeds BOTH
-        # sides of the verify join, and an unpersisted frame re-runs the
-        # whole Arrow pass once per branch (measured round 4: verify join
-        # 9.0 s -> 1.8 s with the pass cached)
-        shingle_df = compute_shingle_arrays(cand_docs, cfg).persist()
-        shingle_df.count()
-        caches.extend((cand_docs, shingle_df))
-        # returned LAZY: ck.run's checkpoint+count materializes the small
-        # tau-filtered result in one job, then the cleanup below releases
-        # the caches it depended on (an eager checkpoint here would
-        # re-materialize the same rows a second time inside ck.run)
-        return verify_pairs(cand, shingle_df, cfg)
+    cand = ck.run("cand_pairs", lambda: candidate_pairs(buckets, cfg), res)
 
     caches: list = []
+
+    def build_dup_pairs() -> DataFrame:
+        # returned LAZY: ck.run's checkpoint+count materializes the small
+        # tau-filtered result in one job, then the cleanup below releases
+        # the caches it filled
+        pairs, used = verify_candidates(cand, base, cfg, n_docs)
+        caches.extend(used)
+        return pairs
+
     pairs = ck.run(
         "dup_pairs",
         build_dup_pairs,
@@ -418,20 +342,15 @@ def update_dedup(
     ).localCheckpoint(eager=True)
     res.tables["cand_pairs"] = cand_new
 
-    cand_ids = (
-        cand_new.select(F.col("a").alias("doc_id"))
-        .unionAll(cand_new.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
-    cand_docs = base.join(cand_ids.hint("shuffle_hash"), "doc_id", "left_semi")
-    shingle_df = compute_shingle_arrays(cand_docs, cfg)
-    new_pairs = verify_pairs(cand_new, shingle_df, cfg)
+    new_pairs, caches = verify_candidates(cand_new, base, cfg, mm.count())
     pairs = (
         prior.tables["dup_pairs"].select("a", "b", "jaccard")
         .unionByName(new_pairs)
         .distinct()
         .localCheckpoint(eager=True)
     )
+    for c in caches:
+        c.unpersist()
     res.tables["dup_pairs"] = pairs
 
     exact_edges = mm.where(F.col("doc_id") != F.col("rep_id")).select(

@@ -109,6 +109,36 @@ def test_blocked_topk_matches_crossjoin_window_plan(spark, emb):
     assert old == new
 
 
+def test_blocked_topk_never_ranks_self_on_nan_scores(spark):
+    # vector 0 has a NaN component, so every score it takes part in is NaN
+    # and lands on the NaN-score sentinel; the self mask must still sort
+    # after it, and the ranking must equal the crossJoin + window plan
+    # (query_id != neighbor_id filter, Spark's NaN-greatest order)
+    from smqtk_indexing_spark.functions import metrics as M
+
+    rows = [
+        (0, [float("nan"), 1.0]),
+        (1, [1.0, 0.0]),
+        (2, [0.0, 1.0]),
+        (3, [1.0, 1.0]),
+        (4, [2.0, 0.5]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    p = ann._self_pairs(df, "vec_id", "embedding")
+    cases = [
+        (ann.euclidean_topk, M.euclidean_distance("va", "vb"), True),
+        (ann.hik_topk, M.histogram_intersection_distance("va", "vb"), True),
+        (ann.cosine_topk, M.cosine_similarity("va", "vb"), False),
+    ]
+    for topk, score, ascending in cases:
+        got = [tuple(r) for r in topk(df, k=4).collect()]
+        assert len(got) == 5 * 4
+        assert all(q != n for q, n, _, _ in got), topk.__name__
+        want = [tuple(r) for r in ann._ranked(p, score, 4, ascending).collect()]
+        norm = lambda rs: sorted((q, n, r, str(s)) for q, n, r, s in rs)  # noqa: E731
+        assert norm(got) == norm(want), topk.__name__
+
+
 def test_pair_cosines_bcast_matches_catalyst(spark, emb):
     # r07: the broadcast-matrix pair scorer (rp_lsh re-rank) must be
     # bit-identical to the joined-array Catalyst cosine on the same pairs.

@@ -5,6 +5,10 @@ Mirrors the reference's state-transition + seeded-property patterns
 (``/root/reference/tests/impls/nn_index/test_lsh.py:190-814``).
 """
 
+from collections import defaultdict
+from dataclasses import replace
+from itertools import combinations
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -72,11 +76,11 @@ def test_salted_path_equals_normal_path(spark):
     buckets = band_buckets(sigs, CFG)
     normal = {
         (r.a, r.b)
-        for r in candidate_pairs(buckets, CFG, salt_threshold=1000).collect()
+        for r in candidate_pairs(buckets, replace(CFG, salt_block_rows=1000)).collect()
     }
     salted = {
         (r.a, r.b)
-        for r in candidate_pairs(buckets, CFG, salt_threshold=8).collect()
+        for r in candidate_pairs(buckets, replace(CFG, salt_block_rows=8)).collect()
     }
     assert normal == salted
     assert len(normal) == 40 * 39 // 2
@@ -85,17 +89,14 @@ def test_salted_path_equals_normal_path(spark):
 def test_giant_bucket_at_bucket_cap_bounded_rows(spark):
     # one bucket at EXACTLY bucket_cap members, many blocks (round-4
     # VERDICT item 4): the block-pair machinery must enumerate all
-    # C(m, 2) pairs without materializing the nested block-pair array in
-    # a single row — index pairs explode first, blocks are sliced per
-    # exploded row (peak per-row = one block pair, ~2 x salt rows).
-    from dataclasses import replace
-
+    # C(m, 2) pairs with no row holding more than one block pair
+    # (~2 x salt ids) — the kernel emits each stripe pair as its own row.
     m, salt = 2000, 64
     cfg = replace(CFG, bucket_cap=m, salt_block_rows=salt)
     buckets = spark.createDataFrame(
         [(7, i) for i in range(m)], "band_hash long, doc_id long"
     )
-    out = candidate_pairs(buckets, cfg, salt_threshold=salt)
+    out = candidate_pairs(buckets, cfg)
     assert out.count() == m * (m - 1) // 2
     # spot parity with the unsalted path on a slice of the id space
     sample = {
@@ -105,60 +106,87 @@ def test_giant_bucket_at_bucket_cap_bounded_rows(spark):
     assert sample == {(a, b) for a in range(10) for b in range(a + 1, 10)}
 
 
-def test_hybrid_mixed_small_and_giant_buckets(spark):
-    # corpus with BOTH a giant bucket family (30 identical docs -> giant at
-    # salt_threshold=8) and small-bucket near-dup groups in the same run:
-    # the small-bucket window-join leg and the giant salted in-row leg must
-    # union + dedupe into exactly the brute-force co-bucket pair set
-    rows = [(i, "giant family content a b c d " * 5) for i in range(30)]
-    rows += [(100 + i, f"small group one {i % 2} x y z w " * 4) for i in range(4)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = compute_signatures(df, CFG)
-    buckets = band_buckets(sigs, CFG)
-    want = {
-        (r.a, r.b)
-        for r in candidate_pairs(buckets, CFG, salt_threshold=10_000).collect()
-    }
-    got_rows = candidate_pairs(buckets, CFG, salt_threshold=8).collect()
-    got = {(r.a, r.b) for r in got_rows}
-    assert len(got_rows) == len(got)  # cross-leg duplicates removed
-    assert got == want
-    giant_ids = set(range(30))
-    assert {(a, b) for a, b in got if a in giant_ids} >= {
-        (a, b) for a in range(30) for b in range(a + 1, 30)
-    }
+def _python_pairs(table, cap, star):
+    """Pure-Python candidate enumeration over a collected bucket table."""
+    groups = defaultdict(list)
+    for bh, d in table:
+        groups[bh].append(d)
+    out = set()
+    for mem in groups.values():
+        mem = sorted(mem)
+        if star:
+            out |= {(mem[0], y) for y in mem[1:] if y != mem[0]}
+        elif len(mem) <= cap:
+            out |= set(combinations(mem, 2))
+    return out
 
 
-def test_candidate_pairs_local_parity(spark):
-    # r07: the one-exchange per-partition generator must emit exactly the
-    # hybrid all-mode pair set — mixed small + giant buckets, cap drops,
-    # cross-band duplicates removed — for every salt threshold.
-    from dataclasses import replace
-
-    from smqtk_indexing_spark.operators.candidates import candidate_pairs_local
-
+@pytest.fixture(scope="module")
+def mixed_buckets(spark):
+    # a 30-member giant family, small near-dup groups and singletons
     rows = [(i, "giant family content a b c d " * 5) for i in range(30)]
     rows += [(100 + i, f"small group one {i % 2} x y z w " * 4) for i in range(4)]
     rows += [(200 + i, f"unique doc {i} alpha beta gamma delta " * 3) for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    buckets = band_buckets(compute_signatures(df, CFG), CFG)
-    for salt in (8, 64, 10_000):
-        want = {
-            (r.a, r.b)
-            for r in candidate_pairs(buckets, CFG, salt_threshold=salt).collect()
-        }
-        got_rows = candidate_pairs_local(buckets, CFG, salt_threshold=salt).collect()
-        got = {(r.a, r.b) for r in got_rows}
-        assert len(got_rows) == len(got)  # distinct
-        assert got == want, salt
-    # bucket_cap drop parity: cap below the giant family size drops it in
-    # both generators
-    cfg_cap = replace(CFG, bucket_cap=20)
-    want = {
-        (r.a, r.b) for r in candidate_pairs(buckets, cfg_cap, mode="all").collect()
-    }
-    got = {(r.a, r.b) for r in candidate_pairs_local(buckets, cfg_cap).collect()}
-    assert got == want
+    buckets = band_buckets(compute_signatures(df, CFG), CFG).cache()
+    table = [(r.band_hash, r.doc_id) for r in buckets.collect()]
+    yield buckets, table
+    buckets.unpersist()
+
+
+@pytest.fixture
+def arrow_batch_sizes(spark):
+    """Arrow batches of 7 rows (buckets straddle batch boundaries), then
+    the session default, which is restored at teardown."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+
+    def sizes():
+        for batch in ("7", default):
+            spark.conf.set(key, batch)
+            yield batch
+
+    yield sizes
+    spark.conf.set(key, default)
+
+
+def test_candidate_pairs_local_parity(spark, mixed_buckets, arrow_batch_sizes):
+    # the per-partition streaming generator must emit exactly the
+    # pure-Python enumeration of the collected bucket table in all mode,
+    # distinct, for every salt and for bucket_cap just below / at / above
+    # the family size
+    buckets, table = mixed_buckets
+    for batch in arrow_batch_sizes():
+        for salt in (4, 8, 64, 10_000):
+            for cap in (29, 30, 31):
+                cfg = replace(CFG, salt_block_rows=salt, bucket_cap=cap)
+                got_rows = candidate_pairs(buckets, cfg).collect()
+                got = {(r.a, r.b) for r in got_rows}
+                assert len(got_rows) == len(got)  # distinct
+                assert got == _python_pairs(table, cap, False), (batch, salt, cap)
+    # the giant family is dropped below its size and kept at it
+    assert (0, 1) not in _python_pairs(table, 29, False)
+    assert (0, 29) in _python_pairs(table, 30, False)
+
+
+def test_hybrid_mixed_small_and_giant_buckets(spark, mixed_buckets, arrow_batch_sizes):
+    # giant and small buckets in the same run: salted (giant) and unsalted
+    # (small) buckets union + dedupe into the enumerated pair set in all
+    # mode, and star edges match the enumeration with no cap, so the
+    # family survives bucket_cap=29
+    buckets, table = mixed_buckets
+    giant = {(a, b) for a in range(30) for b in range(a + 1, 30)}
+    for batch in arrow_batch_sizes():
+        for salt in (4, 8, 64, 10_000):
+            cfg = replace(CFG, salt_block_rows=salt)
+            got_rows = candidate_pairs(buckets, cfg).collect()
+            got = {(r.a, r.b) for r in got_rows}
+            assert len(got_rows) == len(got)  # cross-block duplicates removed
+            assert got == _python_pairs(table, cfg.bucket_cap, False), (batch, salt)
+            assert got >= giant
+            cfg = replace(cfg, bucket_cap=29, pair_mode="star")
+            got = {(r.a, r.b) for r in candidate_pairs(buckets, cfg).collect()}
+            assert got == _python_pairs(table, None, True), (batch, salt)
 
 
 def test_verify_thresholds(spark, small_docs):

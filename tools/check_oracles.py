@@ -8,6 +8,7 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -39,7 +40,8 @@ def main():
     import __spark_entry__ as E
     from smqtk_indexing_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark(app_name="oracle-check", master=f"local[{cpus}]")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

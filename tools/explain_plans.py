@@ -45,9 +45,9 @@ def main() -> None:
     out = ["# PLANS — physical plans of headline queries (sf0.01)\n"]
 
     def build(name):
-        # the pair/substring queries eagerly checkpoint their results (cache
-        # hygiene); capture their UN-materialized dataflow instead so the
-        # plan shows the real topology, not a checkpoint scan
+        # the pair/substring/rp_lsh queries eagerly checkpoint their
+        # results (cache hygiene); capture their UN-materialized dataflow
+        # instead so the plan shows the real topology, not a checkpoint scan
         if name == "near_dup_pairs_lsh":
             return E._lsh_pairs(spark, sf_dir, materialize=False)
         if name == "dup_clusters":
@@ -65,6 +65,12 @@ def main() -> None:
                 nodes=docs,
                 driver_edge_cap=0,
             ).select("doc_id", "cluster_id")
+        if name == "ann_rp_lsh_topk":
+            from smqtk_indexing_spark.operators import ann
+
+            return ann.rp_lsh_topk(
+                E._emb(spark, sf_dir), k=E.TOPK, materialize=False
+            )
         if name == "substring_containment":
             from smqtk_indexing_spark.operators.substrings import substring_pairs
 
