@@ -11,7 +11,12 @@ spark-submit --py-files on multi-executor clusters").
         [--include-substrings] [--partition-lineage]
 
 The session comes from spark-submit's conf (master/executors are cluster
-args, not code); the job only sets engine-level SQL conf. Outputs under
+args, not code); the job only sets engine-level SQL conf. It builds its
+own session rather than calling ``session.get_spark``, so its Python
+workers keep the stock ``pyspark.daemon``, not the engine's
+``worker_daemon``: ``--py-files`` archives join a worker's path per task,
+after the daemon has started, so the daemon could not import this
+package from the zip. Outputs under
 --output: clusters/, dup_pairs/, lineage/ (+ partition_lineage/ when
 requested) as parquet. --checkpoint-dir enables stage resume: re-running
 after a failure skips completed stages (config-hash guarded).

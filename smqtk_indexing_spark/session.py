@@ -1,16 +1,31 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Local mode here; on a real cluster the same conf rides along with
-``spark-submit --py-files`` (north rule). AQE is on for runtime skew-join
-splitting and shuffle-partition coalescing — the runtime half of the skew
-strategy in operators/candidates.py.
+AQE is on for runtime skew-join splitting and shuffle-partition coalescing —
+the runtime half of the skew strategy in operators/candidates.py.
+
+Local masters (``local``, ``local[...]``) run Python workers under
+``worker_daemon``, which stops each task re-reading ``pyspark.zip``. That
+conf is local-only: in local mode the daemon inherits the driver's
+environment and working directory, where every engine UDF already imports
+this package. On a cluster (``spark-submit --py-files``, north rule) the
+archives join a worker's path per task, after the daemon has started, so
+the daemon could not import this package there; those sessions keep the
+stock ``pyspark.daemon``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def _master_conf(master: str) -> dict:
+    """Conf that depends on the master: the engine worker daemon, local only."""
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {"spark.python.daemon.module": "smqtk_indexing_spark.worker_daemon"}
+    return {}
 
 
 def get_spark(
@@ -54,17 +69,14 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         )
         # 64m broadcast threshold for AQE re-planning ONLY (Spark's 10m
-        # default assumes ~1 GB executors): the hot-bucket size table
-        # (~1M rows / 17 MB on the 800k bench corpus) then broadcasts
-        # instead of re-exchanging the 24M-row bucket-membership table a
-        # second time (measured at local[2], quiet window: cand stage
-        # 27 s -> 21.5 s). Scoped to spark.sql.adaptive.* (ADVICE r5): the
-        # STATIC threshold keeps Spark's default, because static planning
-        # sizes relations from compressed on-disk estimates — a ~64 MB
-        # parquet estimate can decompress to several hundred MB per
-        # executor plus driver collect memory. AQE decides from exact
-        # RUNTIME shuffle sizes, so only genuinely-small builds broadcast
-        # and oversized ones fall back to shuffle joins automatically.
+        # default assumes ~1 GB executors). Scoped to spark.sql.adaptive.*
+        # (ADVICE r5): the STATIC threshold keeps Spark's default, because
+        # static planning sizes relations from compressed on-disk
+        # estimates — a ~64 MB parquet estimate can decompress to several
+        # hundred MB per executor plus driver collect memory. AQE decides
+        # from exact RUNTIME shuffle sizes, so only genuinely-small builds
+        # broadcast and oversized ones fall back to shuffle joins
+        # automatically.
         .config(
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
             os.environ.get("SPARK_GRAFT_BCAST_THRESHOLD", "64m"),
@@ -76,6 +88,8 @@ def get_spark(
     builder = builder.config(
         "spark.io.compression.codec", os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")
     )
+    for k, v in _master_conf(master).items():
+        builder = builder.config(k, v)
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     if env_conf:
         import json
