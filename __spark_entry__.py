@@ -91,45 +91,71 @@ def q_near_dup_pairs_bruteforce(spark, sf_dir):
     return _bruteforce_pairs(spark, sf_dir)
 
 
-# Session-scoped memo of the verified LSH pair stage — the driver-contract
-# analog of plans/pipeline.py's Checkpointer stage reuse: near_dup_pairs_lsh
-# and dup_clusters share the identical (sf_dir, config_hash) pair table, so
-# the second query starts from the materialized (small, tau-filtered)
-# checkpoint instead of re-running signatures -> buckets -> verify. Keyed by
-# the live SparkContext so a new session never sees another session's
-# DataFrames; values are the eagerly-checkpointed outputs only (bounded:
-# one tiny table per sf_dir). Testdata is immutable per the driver contract,
-# exactly the assumption Checkpointer resume makes for its parquet stages.
+# Session-scoped memos: one result per (live SparkContext, sf_dir,
+# config_hash), shared by the queries that consume it — near_dup_pairs_lsh
+# and dup_clusters share the verified LSH pairs (_PAIR_MEMO), the two
+# clustering certificates share one full-corpus all-mode run_dedup
+# (_DEDUP_MEMO), and repeat substring_containment calls reuse theirs
+# (_SUBSTR_MEMO). Every value is (checkpointed plan, caches); _memo builds
+# and owns them. Testdata is immutable per the driver contract, exactly the
+# assumption Checkpointer resume makes for its parquet stages. The table
+# names and the value shape are also a contract with the benchmark
+# (perfbench/workloads.py, bench.py), which clears them by name between
+# timed units.
 _PAIR_MEMO: dict = {}
-
-# (lazy verified-pair plan, [persisted chunk caches]) per (ctx, sf_dir,
-# config) — the substring twin of _PAIR_MEMO: the one-shot query path skips
-# the eager checkpoint (substring_pairs cleanup_out) and parks the chunk
-# cache here so repeat calls reuse it; evicted with _PAIR_MEMO.
 _SUBSTR_MEMO: dict = {}
-
+_DEDUP_MEMO: dict = {}
+_MEMO_TABLES = (_PAIR_MEMO, _SUBSTR_MEMO, _DEDUP_MEMO)
+# every cache an entry was built with, kept until its entry is gone
+_MEMO_CACHES: list = []
 
 _DOCS_COUNT_MEMO: dict = {}
 
-# Memoized full-corpus all-mode run_dedup shared by the two cert queries
-# (round-6 VERDICT item 5): q_incremental_equivalence_cert's from-scratch
-# reference run and q_star_cluster_cert's all-mode side are the IDENTICAL
-# computation (same corpus, same config — CFG.pair_mode is already "all"),
-# so the correctness pass runs 4 full pipelines between them instead of 5.
-# Same key discipline and eviction as _PAIR_MEMO; values are
-# PipelineResult objects whose stage tables are Checkpointer-materialized.
-_DEDUP_MEMO: dict = {}
+
+def _live(df: DataFrame) -> bool:
+    return getattr(df.sparkSession.sparkContext, "_jsc", None) is not None
 
 
-def _full_dedup_all(spark, sf_dir: str):
+def _memo(table: dict, spark, sf_dir: str, build) -> DataFrame:
+    """The one materialization point of the driver entry: ``build()``
+    returns ``(lazy plan, caches)``; the first lookup of a key wraps the
+    plan in ONE lazy ``localCheckpoint`` (the caller's first action fills
+    it) and keeps the caches the plan reads until the entry is gone.
+
+    Every lookup first drops entries of stopped contexts (a dead context's
+    blocks must not stay referenced for the process lifetime; the id()
+    key is safe because the value pins the live context) and releases the
+    caches of entries cleared from outside, so a stale persisted plan can
+    never serve a later, identical one."""
+    for t in _MEMO_TABLES:
+        for k in [k for k, (df, _caches) in t.items() if not _live(df)]:
+            del t[k]
+    owned = {id(c) for t in _MEMO_TABLES for _df, cs in t.values() for c in cs}
+    for c in _MEMO_CACHES:
+        if id(c) not in owned and _live(c):
+            c.unpersist()
+    _MEMO_CACHES[:] = [c for c in _MEMO_CACHES if id(c) in owned]
     key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
-    hit = _DEDUP_MEMO.get(key)
-    if hit is None:
-        from smqtk_indexing_spark.plans.pipeline import run_dedup
+    if key not in table:
+        plan, caches = build()
+        table[key] = (plan.localCheckpoint(eager=False), caches)
+        _MEMO_CACHES.extend(caches)
+    return table[key][0]
 
+
+def _full_dedup_all(spark, sf_dir: str) -> DataFrame:
+    """Cluster map of the full-corpus all-mode run_dedup — the identical
+    computation both clustering certificates compare against (same corpus,
+    same config: CFG.pair_mode is already "all"), run once between them."""
+    from smqtk_indexing_spark.plans.pipeline import run_dedup
+
+    def build():
+        # the table is already Checkpointer-materialized: the memo's lazy
+        # checkpoint over it copies it in memory, with no extra job
         base = _docs(spark, sf_dir).select("doc_id", "text")
-        hit = _DEDUP_MEMO[key] = run_dedup(spark, base, CFG, text_col="text")
-    return hit
+        return run_dedup(spark, base, CFG, text_col="text").tables["clusters"], []
+
+    return _memo(_DEDUP_MEMO, spark, sf_dir, build)
 
 
 def _docs_count(spark, sf_dir: str) -> int:
@@ -150,74 +176,23 @@ def _docs_count(spark, sf_dir: str) -> int:
     return n
 
 
-def _memo_evict_stopped() -> None:
-    """Drop memo entries whose SparkContext has been stopped — otherwise a
-    dead context (and its checkpointed blocks) stays referenced for the
-    process lifetime (ADVICE r3). The id()-key is safe BECAUSE the value
-    pins the context; eviction restores that invariant for live contexts
-    only."""
-    dead = [
-        k
-        for k, df in _PAIR_MEMO.items()
-        if getattr(df.sparkSession.sparkContext, "_jsc", None) is None
-    ]
-    for k in dead:
-        del _PAIR_MEMO[k]
-    dead = [
-        k
-        for k, (df, _caches) in _SUBSTR_MEMO.items()
-        if getattr(df.sparkSession.sparkContext, "_jsc", None) is None
-    ]
-    for k in dead:
-        del _SUBSTR_MEMO[k]
-    dead = [
-        k
-        for k, res in _DEDUP_MEMO.items()
-        if any(
-            getattr(df.sparkSession.sparkContext, "_jsc", None) is None
-            for df in res.tables.values()
-        )
-    ]
-    for k in dead:
-        del _DEDUP_MEMO[k]
-
-
-def _lsh_pairs(spark, sf_dir, materialize: bool = True):
+def _lsh_pairs(spark, sf_dir) -> DataFrame:
     # Lean dataflow, the pipeline's (plans/pipeline.py run_dedup): the
     # signature pass carries ONLY band keys (~300 B/doc); shingle arrays are
     # computed a second time for CANDIDATE docs only (verify_candidates).
     # ``cand`` feeds both the id fetch and the verify join, so it is
     # persisted — without it the tokenize+minhash mapInPandas pass re-runs
     # once per DAG branch (the round-1 near_dup_pairs_lsh bottleneck).
-    # ``materialize=False`` returns the PURE LAZY plan (no cache, no
-    # checkpoint, no memo) — for plan capture (tools/explain_plans.py).
-    _memo_evict_stopped()
-    key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
-    hit = _PAIR_MEMO.get(key) if materialize else None
-    if hit is not None:
-        return hit
-    docs = _docs(spark, sf_dir)
-    sigs = compute_signatures(docs, CFG, include=("bands",))
-    cand = candidate_pairs(band_buckets(sigs, CFG), CFG)
-    if materialize:
-        cand = cand.persist()
-    caches: list = []
-    try:
-        out, caches = verify_candidates(
+    def build():
+        docs = _docs(spark, sf_dir)
+        sigs = compute_signatures(docs, CFG, include=("bands",))
+        cand = candidate_pairs(band_buckets(sigs, CFG), CFG).persist()
+        pairs, caches = verify_candidates(
             cand, docs, CFG, _docs_count(spark, sf_dir)
         )
-        if not materialize:
-            return out
-        # materialize the (small, tau-filtered) pair set NOW so the caches
-        # are released before returning — no cached intermediates survive
-        # a queries() run (round-2 VERDICT item 8)
-        out = out.localCheckpoint(eager=True)
-        _PAIR_MEMO[key] = out
-        return out
-    finally:
-        cand.unpersist()
-        for c in caches:
-            c.unpersist()
+        return pairs, [cand, *caches]
+
+    return _memo(_PAIR_MEMO, spark, sf_dir, build)
 
 
 def q_near_dup_pairs_lsh(spark, sf_dir):
@@ -251,9 +226,8 @@ def q_incremental_equivalence_cert(spark, sf_dir):
     prior = run_dedup(spark, first, CFG, text_col="text")
     updated = update_dedup(spark, base, new_ids, prior, CFG, text_col="text")
     # shared with q_star_cluster_cert's all-mode side (_DEDUP_MEMO)
-    scratch = _full_dedup_all(spark, sf_dir)
     inc = updated.tables["clusters"].withColumnRenamed("cluster_id", "c_inc")
-    full = scratch.tables["clusters"].withColumnRenamed("cluster_id", "c_full")
+    full = _full_dedup_all(spark, sf_dir).withColumnRenamed("cluster_id", "c_full")
     n_docs = full.count()
     n_mismatch = (
         full.join(inc, "doc_id")
@@ -288,9 +262,7 @@ def q_star_cluster_cert(spark, sf_dir):
     # replace(CFG, pair_mode="all") == CFG (the default IS "all"), so this
     # side is the identical computation q_incremental_equivalence_cert runs
     # from scratch — shared via _DEDUP_MEMO (round-6 VERDICT item 5)
-    full = _full_dedup_all(spark, sf_dir).tables["clusters"].withColumnRenamed(
-        "cluster_id", "c_all"
-    )
+    full = _full_dedup_all(spark, sf_dir).withColumnRenamed("cluster_id", "c_all")
     n_docs = full.count()
     n_mismatch = (
         full.join(star, "doc_id")
@@ -306,11 +278,8 @@ def q_substring_containment(spark, sf_dir):
     # CDC-anchored substring pass + exact verify. n_docs from the memoized
     # parquet-metadata count fuses the short-leg gate into the chunk
     # materialization agg (one fewer job; substrings.substring_pairs).
-    # One-shot consumers run exactly one action, so the trailing eager
-    # localCheckpoint is skipped (cleanup_out — round-5 VERDICT item 2):
-    # the verified-pair plan is returned lazy and the persisted chunk
-    # cache is memoized beside _PAIR_MEMO (bounded: one per sf_dir/config;
-    # repeat calls reuse both the plan and the warm cache).
+    # The pair plan and its chunk cache are memoized (_memo), so repeat
+    # calls reuse the materialized result.
     #
     # r07: candidates come from the UNCAPPED rarest-chunk anchor
     # (mode='rarest', df_cap=None) instead of the all-interior equi-join.
@@ -324,24 +293,20 @@ def q_substring_containment(spark, sf_dir):
     # made the all-interior chunk join quadratic (605M join rows); the
     # rarest anchor joins one chunk per containee (435k rows, ~1400x
     # less — OPTIMIZATION_r07.md).
-    _memo_evict_stopped()
-    key = (id(spark.sparkContext), sf_dir, CFG.config_hash)
-    hit = _SUBSTR_MEMO.get(key)
-    if hit is not None:
-        return hit[0]
-    caches: list = []
-    out = substring_pairs(
-        _docs(spark, sf_dir),
-        CFG,
-        id_col="doc_id",
-        text_col="text",
-        mode="rarest",
-        df_cap=None,
-        n_docs=_docs_count(spark, sf_dir),
-        cleanup_out=caches,
-    ).select("inner", "outer")
-    _SUBSTR_MEMO[key] = (out, caches)
-    return out
+    return _memo(
+        _SUBSTR_MEMO,
+        spark,
+        sf_dir,
+        lambda: substring_pairs(
+            _docs(spark, sf_dir),
+            CFG,
+            id_col="doc_id",
+            text_col="text",
+            mode="rarest",
+            df_cap=None,
+            n_docs=_docs_count(spark, sf_dir),
+        ),
+    )
 
 
 def q_substring_rarest_cert(spark, sf_dir):
@@ -370,18 +335,21 @@ def q_substring_rarest_cert(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     n_docs = _docs_count(spark, sf_dir)
-    rare = substring_pairs(docs, CFG, mode="rarest", n_docs=n_docs).select(
-        "inner", "outer"
-    )
-    full = substring_pairs(
+    rare, rare_caches = substring_pairs(docs, CFG, mode="rarest", n_docs=n_docs)
+    full, full_caches = substring_pairs(
         docs, CFG, mode="all_interior", n_docs=n_docs
-    ).select("inner", "outer")
+    )
+    # both sides are read by two actions: materialize each once
+    rare = rare.localCheckpoint(eager=False)
+    full = full.localCheckpoint(eager=False)
     dropped = rarest_dropped_containees(
         cdc_chunks(docs, CFG, "doc_id", "text"), CFG
     ).withColumnRenamed("doc_id", "inner")
     covered = full.join(dropped, "inner", "left_anti")
     missing = covered.join(rare, ["inner", "outer"], "left_anti").count()
     extra = rare.join(full, ["inner", "outer"], "left_anti").count()
+    for c in rare_caches + full_caches:
+        c.unpersist()
     return spark.createDataFrame(
         [(missing, extra)], "n_missing long, n_extra long"
     )
@@ -698,6 +666,7 @@ def _ann_certificate(spark, topk, emb, score_col, ascending, k=TOPK):
     """
     from pyspark.sql import Window as W
 
+    topk = topk.localCheckpoint(eager=False)  # read by three actions
     v = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("va"))
     w = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vb")

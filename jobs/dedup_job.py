@@ -10,7 +10,8 @@ spark-submit --py-files on multi-executor clusters").
         [--config config.json] [--pair-mode star|all] \
         [--include-substrings] [--partition-lineage]
 
-The session comes from spark-submit's conf (master/executors are cluster
+The session comes from spark-submit's conf (master, executors and the
+shuffle width, ``--conf spark.sql.shuffle.partitions=<n>``, are cluster
 args, not code); the job only sets engine-level SQL conf. It builds its
 own session rather than calling ``session.get_spark``, so its Python
 workers keep the stock ``pyspark.daemon``, not the engine's
@@ -66,7 +67,6 @@ def main(argv=None) -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
         .getOrCreate()
     )
     files = spark.read.parquet(args.input)

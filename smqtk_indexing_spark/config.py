@@ -91,8 +91,6 @@ class DedupConfig:
     # drift. The r07 production substring query passes df_cap=None
     # explicitly (uncapped: identical domain to the all-interior join).
     rarest_df_cap: int = 10_000
-    # --- misc ---
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:

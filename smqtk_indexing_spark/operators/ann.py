@@ -382,7 +382,11 @@ def _pair_cosines_bcast(
     ids = pdf["id"].to_numpy(np.int64)
     order = np.argsort(ids)
     ids_sorted = ids[order]
-    x_mat = np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
+    # an empty corpus would give a 1-D (0,) array; keep (rows, dims)
+    x_mat = (
+        np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
+        if len(pdf) else np.zeros((0, 0))
+    )
     norms = K.seq_self_norms(x_mat)
     bc = spark.sparkContext.broadcast((ids_sorted, x_mat, norms))
     ca, cb = out_cols
@@ -653,7 +657,6 @@ def rp_lsh_topk(
     vec_col: str = "embedding",
     bucket_cap: int = 10_000,
     salt_block_rows: int = 1024,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale-path ANN: band the 64-bit RP signature into ``bands`` byte
     buckets, bucket-group for candidates, exact cosine re-rank. Approximate:
@@ -670,10 +673,8 @@ def rp_lsh_topk(
     task enumerates a giant bucket's ~m^2 pairs. Pairs come back
     undirected (a < b), so each cosine is computed ONCE and then emitted
     in both (query, neighbor) directions before ranking — halving the
-    re-rank arithmetic vs the directed-candidate shape. With
-    ``materialize`` (default) the (n*k)-row result is checkpointed eagerly
-    so certificate consumers' repeat actions reuse it;
-    ``materialize=False`` keeps the plan fully lazy for plan capture."""
+    re-rank arithmetic vs the directed-candidate shape. The result is a
+    lazy plan; a consumer that acts on it more than once checkpoints it."""
     from smqtk_indexing_spark.operators.candidates import candidate_pairs
 
     sigs = rp_signatures(emb, 64, seed, id_col, vec_col)
@@ -715,7 +716,4 @@ def rp_lsh_topk(
         ).alias("p"),
         "cos",
     ).select("p.query_id", "p.neighbor_id", "cos")
-    out = _ranked(pairs, F.col("cos"), k, ascending=False)
-    if not materialize:
-        return out
-    return out.localCheckpoint(eager=True)
+    return _ranked(pairs, F.col("cos"), k, ascending=False)

@@ -152,6 +152,25 @@ class Checkpointer:
         return df
 
 
+def _run_with_caches(
+    ck: Checkpointer, stage: str, build, result: PipelineResult
+) -> DataFrame:
+    """``ck.run`` for a ``build`` returning ``(lazy plan, caches)``, as
+    ``verify_candidates`` and ``substring_pairs`` do: the stage's
+    checkpoint+count materializes the plan in one action, then the caches
+    it filled are released."""
+    caches: list = []
+
+    def plan() -> DataFrame:
+        df, used = build()
+        caches.extend(used)
+        return df
+
+    return ck.run(
+        stage, plan, result, cleanup=lambda: [c.unpersist() for c in caches]
+    )
+
+
 def run_dedup(
     spark: SparkSession,
     files: DataFrame,
@@ -219,34 +238,19 @@ def run_dedup(
     buckets = band_buckets(sigs, cfg)
     cand = ck.run("cand_pairs", lambda: candidate_pairs(buckets, cfg), res)
 
-    caches: list = []
-
-    def build_dup_pairs() -> DataFrame:
-        # returned LAZY: ck.run's checkpoint+count materializes the small
-        # tau-filtered result in one job, then the cleanup below releases
-        # the caches it filled
-        pairs, used = verify_candidates(cand, base, cfg, n_docs)
-        caches.extend(used)
-        return pairs
-
-    pairs = ck.run(
-        "dup_pairs",
-        build_dup_pairs,
-        res,
-        cleanup=lambda: [c.unpersist() for c in caches],
+    pairs = _run_with_caches(
+        ck, "dup_pairs", lambda: verify_candidates(cand, base, cfg, n_docs), res
     )
 
     if include_substrings:
         reps = base.join(reps_ids, "doc_id", "left_semi")
-        sub_caches: list = []
-        ck.run(
+        _run_with_caches(
+            ck,
             "substr_pairs",
             lambda: substring_pairs(
-                reps, cfg, id_col="doc_id", text_col="text", mode="rarest",
-                cleanup_out=sub_caches,
+                reps, cfg, id_col="doc_id", text_col="text", mode="rarest"
             ),
             res,
-            cleanup=lambda: [c.unpersist() for c in sub_caches],
         )
 
     def build_clusters() -> DataFrame:
@@ -285,8 +289,12 @@ def update_dedup(
     ``all_files``: the post-append corpus. ``new_ids``: single-column
     DataFrame of newly appended doc ids. ``prior``: result of the previous
     run_dedup/update_dedup over the pre-append corpus.
+
+    Stages are materialized in memory by a :class:`Checkpointer` under
+    run_dedup's stage names, so the result carries the same lineage rows.
     """
     cfg = cfg or DedupConfig()
+    ck = Checkpointer(spark, None, cfg)
     res = PipelineResult()
     base = all_files.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
@@ -313,14 +321,15 @@ def update_dedup(
     new_sigs = compute_signatures(
         new_docs, cfg, include=("simhash", "bands", "sha256")
     )
-    sigs_all = old_sigs.unionByName(new_sigs).localCheckpoint(eager=True)
-    res.tables["signatures"] = sigs_all
+    sigs_all = ck.run(
+        "signatures", lambda: old_sigs.unionByName(new_sigs), res
+    )
 
     # exact-dup map over the whole corpus from the LEAN signature union —
     # content is scanned only for the new batch, never re-scanned for the
     # prior corpus (same single-scan contract as run_dedup)
-    mm = X.member_map_from_sigs(sigs_all).localCheckpoint(eager=True)
-    res.tables["member_map"] = mm
+    mm = ck.run("member_map", lambda: X.member_map_from_sigs(sigs_all), res)
+    n_docs = res.lineage[-1][1]  # member_map rows == corpus rows
     reps_ids = mm.where(F.col("doc_id") == F.col("rep_id")).select("doc_id")
     sigs = sigs_all.join(reps_ids, "doc_id", "left_semi")
 
@@ -335,29 +344,31 @@ def update_dedup(
         .distinct()
     )
     touched_buckets = buckets.join(touched, "band_hash", "left_semi")
-    cand = candidate_pairs(touched_buckets, cfg)
+    old_pairs = prior.tables["dup_pairs"].select("a", "b", "jaccard")
     # drop pairs already verified last round (old x old in a touched bucket)
-    cand_new = cand.join(
-        prior.tables["dup_pairs"].select("a", "b"), ["a", "b"], "left_anti"
-    ).localCheckpoint(eager=True)
-    res.tables["cand_pairs"] = cand_new
-
-    new_pairs, caches = verify_candidates(cand_new, base, cfg, mm.count())
-    pairs = (
-        prior.tables["dup_pairs"].select("a", "b", "jaccard")
-        .unionByName(new_pairs)
-        .distinct()
-        .localCheckpoint(eager=True)
+    cand_new = ck.run(
+        "cand_pairs",
+        lambda: candidate_pairs(touched_buckets, cfg).join(
+            old_pairs.select("a", "b"), ["a", "b"], "left_anti"
+        ),
+        res,
     )
-    for c in caches:
-        c.unpersist()
-    res.tables["dup_pairs"] = pairs
+
+    def build_dup_pairs():
+        new_pairs, caches = verify_candidates(cand_new, base, cfg, n_docs)
+        return old_pairs.unionByName(new_pairs).distinct(), caches
+
+    pairs = _run_with_caches(ck, "dup_pairs", build_dup_pairs, res)
 
     exact_edges = mm.where(F.col("doc_id") != F.col("rep_id")).select(
         F.col("doc_id").alias("a"), F.col("rep_id").alias("b")
     )
-    clusters = connected_components(
-        pairs.select("a", "b").unionByName(exact_edges), nodes=mm.select("doc_id")
+    ck.run(
+        "clusters",
+        lambda: connected_components(
+            pairs.select("a", "b").unionByName(exact_edges),
+            nodes=mm.select("doc_id"),
+        ),
+        res,
     )
-    res.tables["clusters"] = clusters.localCheckpoint(eager=True)
     return res

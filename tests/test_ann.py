@@ -491,3 +491,11 @@ def test_cosine_dup_pairs_banded_recall(spark):
     assert banded <= brute
     assert len(brute) >= 40  # planted pairs present
     assert len(banded) >= 0.99 * len(brute)
+
+
+def test_rp_lsh_topk_empty_table_returns_empty(spark):
+    # an empty embedding table has no candidates to rank: empty top-k, the
+    # same as cosine_topk, not a shape error from the broadcast scorer
+    df = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert ann.rp_lsh_topk(df, k=3).collect() == []
+    assert ann.cosine_topk(df, k=3).collect() == []

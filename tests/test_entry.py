@@ -1,12 +1,13 @@
 """Driver-contract smoke tests: entry() runs, queries()/oracle_sql() keys
 line up, a fast subset of queries matches DuckDB at sf0.001."""
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E
 
 FAST_ORACLE_QUERIES = [
@@ -73,3 +74,55 @@ def test_fast_queries_match_duckdb_sf0001(spark, name, sf001_dir):
 
     assert sorted(cols) == sorted(ocols)
     assert norm(cols, rows) == norm(ocols, orows)
+
+
+def _reset_memos():
+    # the benchmark's per-unit reset: clear the four memo tables by name
+    for _plan, caches in E._SUBSTR_MEMO.values():
+        for c in caches:
+            c.unpersist()
+    for name in ("_PAIR_MEMO", "_SUBSTR_MEMO", "_DEDUP_MEMO", "_DOCS_COUNT_MEMO"):
+        getattr(E, name).clear()
+
+
+def _jobs(spark, group, query):
+    """(Spark jobs, rows) of collecting ``query()`` under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = len(query().collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+
+def test_pair_memo_materializes_once_and_resets(spark, sf001_dir):
+    qs = E.queries()
+
+    def lsh():
+        return qs["near_dup_pairs_lsh"](spark, sf001_dir)
+
+    def clusters():
+        return qs["dup_clusters"](spark, sf001_dir)
+
+    _reset_memos()
+    lsh().collect()  # warm-up
+    _reset_memos()
+    warm, n_pairs = _jobs(spark, "memo_lsh", lsh)
+    assert n_pairs == 28
+    assert warm < 20  # one lazy checkpoint; an eager one in the build ran 20
+    held = [c for _plan, caches in E._PAIR_MEMO.values() for c in caches]
+    assert held and all(c.is_cached for c in held)
+
+    hit, n_docs = _jobs(spark, "memo_cc_hit", clusters)
+    _reset_memos()
+    rebuilt, n_docs_rebuilt = _jobs(spark, "memo_cc_rebuild", clusters)
+    assert n_docs == n_docs_rebuilt
+    assert hit < rebuilt  # dup_clusters reads the memoized pairs
+
+    # the cleared entry's caches were released by the next lookup, so no
+    # stale persisted plan serves the rebuild: it costs the same jobs
+    assert not any(c.is_cached for c in held)
+    _reset_memos()
+    again, _ = _jobs(spark, "memo_lsh_again", lsh)
+    assert again == warm

@@ -81,3 +81,20 @@ def test_incremental_update_signature_counts(spark):
     sigs = updated.tables["signatures"]
     assert sigs.count() == 300
     assert sigs.select("doc_id").distinct().count() == 300
+
+
+def test_update_dedup_lineage_rows_match_tables(spark):
+    # update_dedup materializes through a Checkpointer under run_dedup's
+    # stage names: one lineage row per stage, rows_out = the table's count
+    files, _ = synth_files(n=200, seed=31)
+    full_df = spark.createDataFrame(files)
+    prior = run_dedup(spark, spark.createDataFrame(files.iloc[:150]), CFG)
+    new_ids = spark.createDataFrame(
+        [(int(i),) for i in files.iloc[150:]["doc_id"]], "doc_id long"
+    )
+    updated = update_dedup(spark, full_df, new_ids, prior, CFG)
+    stages = ["signatures", "member_map", "cand_pairs", "dup_pairs", "clusters"]
+    assert [row[0] for row in updated.lineage] == stages
+    for stage, rows_out, *_rest in updated.lineage:
+        assert rows_out == updated.tables[stage].count(), stage
+    assert updated.lineage[1][1] == len(files)  # member_map covers the corpus

@@ -13,6 +13,15 @@ from smqtk_indexing_spark.sources.files import synth_files
 CFG = DedupConfig()
 
 
+def _pairs(df, cfg, **kw):
+    """(inner, outer) rows of one substring_pairs action; caches released."""
+    out, caches = substring_pairs(df, cfg, **kw)
+    rows = [(r.inner, r.outer) for r in out.collect()]
+    for c in caches:
+        c.unpersist()
+    return rows
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     files, _truth = synth_files(n=400, seed=7)
@@ -35,7 +44,7 @@ def corpus(spark):
 def test_cdc_substring_exact(spark, corpus):
     # CDC anchor join + short-containee broadcast path = EXACT containment
     df, brute = corpus
-    got = [(r.inner, r.outer) for r in substring_pairs(df, CFG).collect()]
+    got = _pairs(df, CFG)
     assert len(got) == len(set(got))  # disjoint paths -> no duplicate rows
     assert set(got) == brute
 
@@ -50,7 +59,7 @@ def test_short_containees_found(spark):
         (4, "unrelated content with nothing shared at all " * 3),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.inner, r.outer) for r in substring_pairs(df, CFG).collect()}
+    got = set(_pairs(df, CFG))
     brute = {
         (a, b)
         for a, ta in rows
@@ -96,7 +105,7 @@ def test_short_heavy_corpus_escalates_and_stays_exact(spark):
         if a != b and len(ta) < len(tb) and ta in tb
     }
     cfg = dataclasses.replace(CFG, short_nlj_cap=10)  # force escalation
-    got = [(r.inner, r.outer) for r in substring_pairs(df, cfg).collect()]
+    got = _pairs(df, cfg)
     assert len(got) == len(set(got))
     assert set(got) == brute
     # bound check: residue (< 3 interior-bearing chunks at fine granularity)
@@ -119,10 +128,7 @@ def test_short_heavy_corpus_escalates_and_stays_exact(spark):
 
 def test_rarest_mode_equals_all_interior(spark, corpus):
     df, brute = corpus
-    got = {
-        (r.inner, r.outer)
-        for r in substring_pairs(df, CFG, mode="rarest").collect()
-    }
+    got = set(_pairs(df, CFG, mode="rarest"))
     assert got <= brute
     assert len(got) >= 0.99 * len(brute)
 
@@ -135,14 +141,8 @@ def test_rarest_uncapped_exactly_equals_all_interior(spark, corpus):
     # must be IDENTICAL to mode='all_interior' (not just a subset) and to
     # the brute-force truth.
     df, brute = corpus
-    rare = {
-        (r.inner, r.outer)
-        for r in substring_pairs(df, CFG, mode="rarest", df_cap=None).collect()
-    }
-    full = {
-        (r.inner, r.outer)
-        for r in substring_pairs(df, CFG, mode="all_interior").collect()
-    }
+    rare = set(_pairs(df, CFG, mode="rarest", df_cap=None))
+    full = set(_pairs(df, CFG, mode="all_interior"))
     assert rare == full
     assert rare == brute
 
@@ -178,13 +178,13 @@ def test_suffix_array_pass_partitioned_subset(spark, corpus):
 
 
 def test_cleanup_out_lazy_path_exact(spark, corpus):
-    # cleanup_out: the one-shot lazy path (no trailing eager checkpoint)
-    # must produce the identical exact pair set, hand back the persisted
-    # chunk cache for the caller to release, and stay correct after the
-    # caller unpersists it (plan recomputes, just uncached).
+    # the (pairs, caches) contract: substring_pairs returns a lazy plan (no
+    # checkpoint of its own) that must produce the identical exact pair
+    # set, hands back the persisted chunk cache for the caller to release,
+    # and stays correct after the caller unpersists it (plan recomputes,
+    # just uncached).
     df, brute = corpus
-    caches = []
-    out = substring_pairs(df, CFG, cleanup_out=caches)
+    out, caches = substring_pairs(df, CFG)
     got = {(r.inner, r.outer) for r in out.collect()}
     assert got == brute
     assert len(caches) == 1 and caches[0].is_cached

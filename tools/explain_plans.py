@@ -11,10 +11,11 @@ Usage: python tools/explain_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUERIES = [
     "sha256_rows",
@@ -44,12 +45,11 @@ def main() -> None:
     qs = E.queries()
     out = ["# PLANS — physical plans of headline queries (sf0.01)\n"]
 
+    # capture the lazy plans the entry memo would checkpoint: a checkpoint
+    # scan shows none of the topology this file is for
+    E._memo = lambda table, spark, sf_dir, build: build()[0]
+
     def build(name):
-        # the pair/substring/rp_lsh queries eagerly checkpoint their
-        # results (cache hygiene); capture their UN-materialized dataflow
-        # instead so the plan shows the real topology, not a checkpoint scan
-        if name == "near_dup_pairs_lsh":
-            return E._lsh_pairs(spark, sf_dir, materialize=False)
         if name == "dup_clusters":
             # force the DISTRIBUTED star path: the hybrid's driver
             # union-find fast path (taken at sf0.01's tiny edge count)
@@ -65,19 +65,6 @@ def main() -> None:
                 nodes=docs,
                 driver_edge_cap=0,
             ).select("doc_id", "cluster_id")
-        if name == "ann_rp_lsh_topk":
-            from smqtk_indexing_spark.operators import ann
-
-            return ann.rp_lsh_topk(
-                E._emb(spark, sf_dir), k=E.TOPK, materialize=False
-            )
-        if name == "substring_containment":
-            from smqtk_indexing_spark.operators.substrings import substring_pairs
-
-            return substring_pairs(
-                E._docs(spark, sf_dir), E.CFG, id_col="doc_id", text_col="text",
-                materialize=False,
-            ).select("inner", "outer")
         return qs[name](spark, sf_dir)
 
     for name in QUERIES:
