@@ -35,6 +35,16 @@ CFG = DedupConfig()
 K = CFG.shingle_k
 TAU = CFG.tau
 TOPK = 5
+# the seven queries answered by _topk_certificate (one oracle, _TOPK_CERT_SQL)
+TOPK_CERTS = (
+    "ann_ivf_cert",
+    "ann_ivf_dist_cert",
+    "ann_rp_lsh_cert",
+    "ann_mrpt_cert",
+    "rp_hamming_cert",
+    "rp_hamming128_cert",
+    "itq_cert",
+)
 
 # ---------------------------------------------------------------------------
 # loaders
@@ -498,35 +508,14 @@ def q_rp_hamming128_topk(spark, sf_dir):
 
 def q_rp_hamming128_cert(spark, sf_dir):
     # same certificate form as rp_hamming_cert, over multi-word codes
-    from pyspark.sql import Window as W
-
-    emb = _emb(spark, sf_dir)
-    topk = q_rp_hamming128_topk(spark, sf_dir)
-    sigs = ann.rp_signatures_words(emb, bits=128)
-    sa = sigs.select(
-        F.col("vec_id").alias("query_id"), F.col("rp_sig_words").alias("sa")
-    )
-    sb = sigs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("rp_sig_words").alias("sb")
-    )
-    j = (
-        topk.join(sa, "query_id")
-        .join(sb, "neighbor_id")
-        .withColumn(
-            "true_score",
-            F.round(M.hamming_words("sa", "sb").cast("double") / F.lit(128.0), 6),
-        )
-    )
-    n_rows = topk.count()
-    n_score_mismatch = j.where(
-        F.abs(F.col("score") - F.col("true_score")) > 1e-9
-    ).count()
-    win = W.partitionBy("query_id").orderBy("rank")
-    bad = F.lead("score").over(win) < F.col("score")
-    n_rank_violations = topk.withColumn("bad", bad).where("bad").count()
-    return spark.createDataFrame(
-        [(n_rows, n_score_mismatch, n_rank_violations)],
-        "n_rows long, n_score_mismatch long, n_rank_violations long",
+    sigs = ann.rp_signatures_words(_emb(spark, sf_dir), bits=128)
+    return _topk_certificate(
+        spark,
+        ann.hamming_topk_words(sigs, k=TOPK, bits=128),
+        sigs,
+        "rp_sig_words",
+        lambda a, b: M.hamming_words(a, b).cast("double") / F.lit(128.0),
+        True,
     )
 
 
@@ -541,13 +530,13 @@ def _itq_codes(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     model = itq_fit(emb, bits=64, n_iter=50, seed=CFG.seed, max_sample=4096)
-    return itq_hash_codes(emb, model), emb
+    return itq_hash_codes(emb, model)
 
 
 def q_itq_hamming_topk(spark, sf_dir):
     # the reference's flagship functor end-to-end: ITQ codes + Hamming
     # ranking (hash-state-dependent -> rows-only oracle; see itq_cert)
-    codes, _ = _itq_codes(spark, sf_dir)
+    codes = _itq_codes(spark, sf_dir)
     return ann.hamming_topk(codes, k=TOPK, sig_col="itq_code")
 
 
@@ -555,32 +544,14 @@ def q_itq_cert(spark, sf_dir):
     # certificate: k rows per vector, every reported score equals the
     # independently recomputed Hamming/64 over the code table, ranks
     # monotone — same oracle form as rp_hamming_cert.
-    from pyspark.sql import Window as W
-
-    codes, _ = _itq_codes(spark, sf_dir)
-    topk = ann.hamming_topk(codes, k=TOPK, sig_col="itq_code")
-    sa = codes.select(F.col("vec_id").alias("query_id"), F.col("itq_code").alias("sa"))
-    sb = codes.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("itq_code").alias("sb")
-    )
-    j = (
-        topk.join(sa, "query_id")
-        .join(sb, "neighbor_id")
-        .withColumn(
-            "true_score",
-            F.round(M.hamming64("sa", "sb").cast("double") / F.lit(64.0), 6),
-        )
-    )
-    n_rows = topk.count()
-    n_score_mismatch = j.where(
-        F.abs(F.col("score") - F.col("true_score")) > 1e-9
-    ).count()
-    win = W.partitionBy("query_id").orderBy("rank")
-    bad = F.lead("score").over(win) < F.col("score")
-    n_rank_violations = topk.withColumn("bad", bad).where("bad").count()
-    return spark.createDataFrame(
-        [(n_rows, n_score_mismatch, n_rank_violations)],
-        "n_rows long, n_score_mismatch long, n_rank_violations long",
+    codes = _itq_codes(spark, sf_dir)
+    return _topk_certificate(
+        spark,
+        ann.hamming_topk(codes, k=TOPK, sig_col="itq_code"),
+        codes,
+        "itq_code",
+        _hamming64,
+        True,
     )
 
 
@@ -627,10 +598,11 @@ def q_ann_ivf_topk(spark, sf_dir):
 
 def q_ann_ivf_cert(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return _ann_certificate(
+    return _topk_certificate(
         spark,
         ann.ivf_topk(emb, k=TOPK, seed=CFG.seed),
         emb,
+        "embedding",
         M.cosine_similarity,
         False,
     )
@@ -644,37 +616,38 @@ def q_ann_ivf_dist_cert(spark, sf_dir):
     # fit: k rows per query, every reported score equal to the exact
     # cosine recomputed from raw embeddings, monotone ranks.
     emb = _emb(spark, sf_dir)
-    return _ann_certificate(
+    return _topk_certificate(
         spark,
         ann.ivf_topk(emb, k=TOPK, seed=CFG.seed, fit="distributed"),
         emb,
+        "embedding",
         M.cosine_similarity,
         False,
     )
 
 
-def _ann_certificate(spark, topk, emb, score_col, ascending, k=TOPK):
-    """Oracle-checkable correctness certificate for an approximate ANN
-    query (VERDICT r1 item 4): DuckDB cannot recompute hash-dependent
-    candidate sets, but it CAN assert the three exactness invariants the
-    operator guarantees regardless of which candidates banding surfaced:
+def _topk_certificate(spark, topk, table, val_col, score, ascending):
+    """Oracle-checkable correctness certificate for a top-k query whose
+    candidates or codes DuckDB cannot recompute (hash- or model-state-
+    dependent): it CAN assert the three exactness invariants the operator
+    guarantees regardless of which candidates surfaced:
       - exactly k rows per query (n_rows = k * n_queries),
-      - every reported score equals the independently recomputed exact
-        score of that (query, neighbor) pair,
+      - every reported score equals ``score(va, vb)`` recomputed
+        independently from ``table``'s ``val_col`` (raw embeddings for the
+        cosine paths, the code table for the Hamming ones),
       - ranks are monotone in score within each query.
-    ``score_col(va, vb)`` recomputes the exact measure from raw embeddings.
     """
     from pyspark.sql import Window as W
 
     topk = topk.localCheckpoint(eager=False)  # read by three actions
-    v = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("va"))
-    w = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vb")
+    va = table.select(F.col("vec_id").alias("query_id"), F.col(val_col).alias("va"))
+    vb = table.select(
+        F.col("vec_id").alias("neighbor_id"), F.col(val_col).alias("vb")
     )
     j = (
-        topk.join(v, "query_id")
-        .join(w, "neighbor_id")
-        .withColumn("true_score", F.round(score_col(F.col("va"), F.col("vb")), 6))
+        topk.join(va, "query_id")
+        .join(vb, "neighbor_id")
+        .withColumn("true_score", F.round(score(F.col("va"), F.col("vb")), 6))
     )
     n_rows = topk.count()
     n_score_mismatch = j.where(
@@ -690,10 +663,19 @@ def _ann_certificate(spark, topk, emb, score_col, ascending, k=TOPK):
     )
 
 
+def _hamming64(a, b):
+    return M.hamming64(a, b).cast("double") / F.lit(64.0)
+
+
 def q_ann_rp_lsh_cert(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return _ann_certificate(
-        spark, ann.rp_lsh_topk(emb, k=TOPK), emb, M.cosine_similarity, False
+    return _topk_certificate(
+        spark,
+        ann.rp_lsh_topk(emb, k=TOPK),
+        emb,
+        "embedding",
+        M.cosine_similarity,
+        False,
     )
 
 
@@ -701,10 +683,11 @@ def q_ann_mrpt_cert(spark, sf_dir):
     from smqtk_indexing_spark.operators.mrpt import mrpt_topk
 
     emb = _emb(spark, sf_dir)
-    return _ann_certificate(
+    return _topk_certificate(
         spark,
         mrpt_topk(emb, k=TOPK, n_trees=8, depth=4, seed=CFG.seed),
         emb,
+        "embedding",
         M.cosine_similarity,
         False,
     )
@@ -713,33 +696,9 @@ def q_ann_mrpt_cert(spark, sf_dir):
 def q_rp_hamming_cert(spark, sf_dir):
     # hamming scores are hash-state-dependent; the certificate recomputes
     # them from the signature table and checks rank monotonicity + k-rows
-    emb = _emb(spark, sf_dir)
-    topk = ann.hamming_topk(ann.rp_signatures(emb), k=TOPK)
-    sigs = ann.rp_signatures(emb)
-    sa = sigs.select(F.col("vec_id").alias("query_id"), F.col("rp_sig").alias("sa"))
-    sb = sigs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("rp_sig").alias("sb")
-    )
-    j = (
-        topk.join(sa, "query_id")
-        .join(sb, "neighbor_id")
-        .withColumn(
-            "true_score",
-            F.round(M.hamming64("sa", "sb").cast("double") / F.lit(64.0), 6),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    n_rows = topk.count()
-    n_score_mismatch = j.where(
-        F.abs(F.col("score") - F.col("true_score")) > 1e-9
-    ).count()
-    win = W.partitionBy("query_id").orderBy("rank")
-    bad = F.lead("score").over(win) < F.col("score")
-    n_rank_violations = topk.withColumn("bad", bad).where("bad").count()
-    return spark.createDataFrame(
-        [(n_rows, n_score_mismatch, n_rank_violations)],
-        "n_rows long, n_score_mismatch long, n_rank_violations long",
+    sigs = ann.rp_signatures(_emb(spark, sf_dir))
+    return _topk_certificate(
+        spark, ann.hamming_topk(sigs, k=TOPK), sigs, "rp_sig", _hamming64, True
     )
 
 
@@ -1177,6 +1136,13 @@ _HIK = (
     " FOR i IN generate_series(1, len(a.embedding))])"
 )
 
+_TOPK_CERT_SQL = f"""
+SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
+       CAST(0 AS BIGINT) AS n_score_mismatch,
+       CAST(0 AS BIGINT) AS n_rank_violations
+FROM embeddings
+"""
+
 
 def _lang_sql() -> str:
     hits = {
@@ -1373,53 +1339,12 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(value::DECIMAL(18,4))::DOUBLE, 4) AS sum_value
             FROM events GROUP BY event_type
         """,
-        # ANN certificates (VERDICT r1 item 4): DuckDB cannot recompute the
-        # hash-dependent candidate sets, but it can assert the operator's
-        # exactness invariants — k rows per query, scores equal to the
-        # independently recomputed exact measure (checked in Spark against
-        # raw embeddings), monotone ranks.
-        "ann_rp_lsh_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
-        "ann_mrpt_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
-        "ann_ivf_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
-        "ann_ivf_dist_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
-        "rp_hamming_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
-        "rp_hamming128_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
-        "itq_cert": f"""
-            SELECT (count(*) * {TOPK})::BIGINT AS n_rows,
-                   CAST(0 AS BIGINT) AS n_score_mismatch,
-                   CAST(0 AS BIGINT) AS n_rank_violations
-            FROM embeddings
-        """,
+        # top-k certificates (_topk_certificate): DuckDB cannot recompute
+        # the hash- or model-dependent candidate sets and codes, but it can
+        # state the exactness invariants' only legal values — k rows per
+        # query, no score mismatch against the recomputed exact measure
+        # (checked in Spark), no rank violation.
+        **dict.fromkeys(TOPK_CERTS, _TOPK_CERT_SQL),
         # lifecycle counts recomputed from the raw table: build indexes the
         # even ids; the full-corpus update skips even (duplicate) inserts
         # and adds the odd ids; the remove drops the 5 listed ids.

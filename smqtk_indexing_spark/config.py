@@ -32,8 +32,7 @@ class DedupConfig:
     bands: int = 32
     rows_per_band: int = 4
     seed: int = 42
-    # --- SimHash ---
-    simhash_bits: int = 64
+    # --- SimHash (64-bit codes) ---
     simhash_hamming_max: int = 3  # near-dup radius for the SimHash path
     # --- verification ---
     tau: float = 0.8              # exact-Jaccard acceptance threshold

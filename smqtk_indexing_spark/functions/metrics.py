@@ -12,6 +12,8 @@ Reference citations:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -47,15 +49,19 @@ def euclidean_distance(a, b) -> Column:
 
 
 def cosine_similarity(a, b) -> Column:
-    """dot/(|a||b|) — utils/metrics.py:89-117."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """dot/(|a||b|) — utils/metrics.py:89-117. NULL when either vector has
+    zero norm (ANSI ``/`` raises DIVIDE_BY_ZERO; DuckDB's 0.0/0.0 is NULL
+    too)."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def cosine_distance(a, b) -> Column:
     """Angular distance arccos(sim)/pi, clamped to [-1,1] —
-    utils/metrics.py:120-137."""
-    sim = F.greatest(F.lit(-1.0), F.least(F.lit(1.0), cosine_similarity(a, b)))
-    return F.acos(sim) / F.lit(float(__import__("math").pi))
+    utils/metrics.py:120-137. NULL for a zero vector (``greatest``/``least``
+    skip nulls, so the clamp alone would turn it into distance 0)."""
+    sim = cosine_similarity(a, b)
+    clamped = F.greatest(F.lit(-1.0), F.least(F.lit(1.0), sim))
+    return F.when(sim.isNotNull(), F.acos(clamped) / F.lit(math.pi))
 
 
 def histogram_intersection_distance(a, b) -> Column:

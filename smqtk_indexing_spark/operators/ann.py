@@ -33,6 +33,9 @@ from smqtk_indexing_spark.functions import metrics as M
 def _ranked(
     pairs: DataFrame, score: Column, k: int, ascending: bool
 ) -> DataFrame:
+    """The one Catalyst top-k of every Spark-ranked ANN path: per query,
+    order by ``score`` then ``neighbor_id``, keep ``k``, round to 6
+    decimals."""
     order = [score.asc() if ascending else score.desc(), F.col("neighbor_id").asc()]
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
@@ -353,6 +356,26 @@ def hamming_pairs_banded(
     )
 
 
+def _pair_cosines(
+    cand: DataFrame,
+    emb: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    out_cols: tuple = ("a", "b"),
+) -> DataFrame:
+    """(a, b) candidate pairs -> (a, b, cos): the exact re-rank of the
+    scale paths (``impls/nn_index/lsh.py:505-519`` shape) — fetch both
+    vectors by id and score :func:`M.cosine_similarity` (NULL for a zero
+    vector). :func:`_pair_cosines_bcast` is its broadcast twin."""
+    v = emb.select(F.col(id_col).cast("long").alias("did"), F.col(vec_col).alias("v"))
+    ca, cb = out_cols
+    return (
+        cand.join(v.select(F.col("did").alias(ca), F.col("v").alias("va")), ca)
+        .join(v.select(F.col("did").alias(cb), F.col("v").alias("vb")), cb)
+        .select(ca, cb, M.cosine_similarity("va", "vb").alias("cos"))
+    )
+
+
 def _pair_cosines_bcast(
     cand: DataFrame,
     emb: DataFrame,
@@ -361,12 +384,12 @@ def _pair_cosines_bcast(
     out_cols: tuple = ("a", "b"),
 ) -> DataFrame:
     """(a, b) candidate pairs -> (a, b, cos) via a broadcast corpus matrix
-    and the exact sequential-fold kernel — replaces the
-    ``cand.join(v, "a").join(v, "b")`` + interpreted
-    ``M.cosine_similarity`` re-rank shape (guide §2.3 "shuffle keys and
-    metadata instead of payloads": only two longs per candidate row ever
-    move; the vectors ride once in the broadcast, which is the same
-    (id, vector) relation the join's broadcast hash build already shipped).
+    and the exact sequential-fold kernel — the broadcast twin of
+    :func:`_pair_cosines`' two vector-fetch joins (guide §2.3 "shuffle
+    keys and metadata instead of payloads": only two longs per candidate
+    row ever move; the vectors ride once in the broadcast, which is the
+    same (id, vector) relation the join's broadcast hash build already
+    shipped).
 
     Exactness: per-pair dot and both norms come from the dimension-ordered
     fold (kernels.seq_score_block contract) and the final
@@ -435,7 +458,9 @@ def cosine_dup_pairs(
     return (
         a.crossJoin(F.broadcast(b))
         .where(F.col("a") < F.col("b"))
-        .withColumn("cosine", M.dot("va", "vb") / (F.col("na") * F.col("nb")))
+        .withColumn(
+            "cosine", F.try_divide(M.dot("va", "vb"), F.col("na") * F.col("nb"))
+        )
         .where(F.col("cosine") >= F.lit(tau))
         .select("a", "b", F.round("cosine", 6).alias("cosine"))
     )
@@ -459,29 +484,10 @@ def cosine_dup_pairs_banded(
     pigeonhole-EXACT banded join, so recall loss is only the radius cut."""
     sigs = rp_signatures(emb, 64, seed, id_col, vec_col)
     cand = hamming_pairs_banded(sigs, hamming_radius).select("a", "b")
-    v = emb.select(
-        F.col(id_col).cast("long").alias("did"),
-        F.col(vec_col).alias("v"),
-        M.l2_norm(vec_col).alias("n"),
-    )
     return (
-        cand.join(
-            v.select(
-                F.col("did").alias("a"), F.col("v").alias("va"),
-                F.col("n").alias("na"),
-            ),
-            "a",
-        )
-        .join(
-            v.select(
-                F.col("did").alias("b"), F.col("v").alias("vb"),
-                F.col("n").alias("nb"),
-            ),
-            "b",
-        )
-        .withColumn("cosine", M.dot("va", "vb") / (F.col("na") * F.col("nb")))
-        .where(F.col("cosine") >= F.lit(tau))
-        .select("a", "b", F.round("cosine", 6).alias("cosine"))
+        _pair_cosines(cand, emb, id_col, vec_col)
+        .where(F.col("cos") >= F.lit(tau))
+        .select("a", "b", F.round("cos", 6).alias("cosine"))
     )
 
 
@@ -638,14 +644,8 @@ def ivf_topk(
     cand = x.join(y, "cell").where(
         F.col("query_id") != F.col("neighbor_id")
     ).select("query_id", "neighbor_id")
-    v = emb.select(F.col(id_col).cast("long").alias("did"), F.col(vec_col).alias("v"))
-    pairs = cand.join(
-        v.select(F.col("did").alias("query_id"), F.col("v").alias("va")), "query_id"
-    ).join(
-        v.select(F.col("did").alias("neighbor_id"), F.col("v").alias("vb")),
-        "neighbor_id",
-    )
-    return _ranked(pairs, M.cosine_similarity("va", "vb"), k, ascending=False)
+    pairs = _pair_cosines(cand, emb, id_col, vec_col, ("query_id", "neighbor_id"))
+    return _ranked(pairs, F.col("cos"), k, ascending=False)
 
 
 def rp_lsh_topk(
@@ -702,10 +702,9 @@ def rp_lsh_topk(
     )
     cand = candidate_pairs(bucketed, cfg)
     # exact cosine re-rank once per undirected pair, via the broadcast
-    # corpus matrix instead of two vector-fetch joins + an interpreted
-    # per-pair Catalyst fold (see _pair_cosines_bcast; bit-identical
-    # scores, r07: two joins and the BatchEval of ~6M interpreted
-    # aggregate() calls removed at the driver's sf1.0 scale)
+    # corpus matrix instead of _pair_cosines' two vector-fetch joins + an
+    # interpreted per-pair Catalyst fold (bit-identical scores; the id-join
+    # form measured slower here at every tested size, see ROADMAP)
     scored = _pair_cosines_bcast(cand, emb, id_col, vec_col)
     pairs = scored.select(
         F.explode(

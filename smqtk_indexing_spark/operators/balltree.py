@@ -34,8 +34,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from smqtk_indexing_spark.operators.ann import _ranked
 
 
 def _local_topk(qx: np.ndarray, x: np.ndarray, k: int):
@@ -60,21 +62,6 @@ def _local_topk(qx: np.ndarray, x: np.ndarray, k: int):
         order = np.argsort(d2[rows, idx], axis=1, kind="stable")
         idx = idx[rows, order]
         return np.sqrt(d2[rows, idx]), idx
-
-
-def _merge_topk(locals_df: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        locals_df.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round("dist", 6).alias("score"),
-        )
-    )
 
 
 def balltree_topk(
@@ -134,7 +121,9 @@ def balltree_topk(
     locals_df = corpus.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
     ).mapInPandas(per_shard, schema="query_id long, neighbor_id long, dist double")
-    return _merge_topk(locals_df, k)
+    # self pairs out, then the global merge is ann's one window top-k
+    self_free = locals_df.where(F.col("query_id") != F.col("neighbor_id"))
+    return _ranked(self_free, F.col("dist"), k, ascending=True)
 
 
 def balltree_topk_allpairs(
@@ -206,4 +195,5 @@ def balltree_topk_allpairs(
         .groupBy("qb", "cb")
         .applyInPandas(per_cell, schema="query_id long, neighbor_id long, dist double")
     )
-    return _merge_topk(locals_df, k)
+    self_free = locals_df.where(F.col("query_id") != F.col("neighbor_id"))
+    return _ranked(self_free, F.col("dist"), k, ascending=True)

@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smqtk_indexing_spark import kernels as K
-from smqtk_indexing_spark.functions import metrics as M
-from smqtk_indexing_spark.operators.ann import _ranked
+from smqtk_indexing_spark.operators.ann import _pair_cosines, _ranked
 
 
 class MrptModel:
@@ -122,11 +121,5 @@ def mrpt_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    v = emb.select(F.col(id_col).cast("long").alias("did"), F.col(vec_col).alias("v"))
-    pairs = cand.join(
-        v.select(F.col("did").alias("query_id"), F.col("v").alias("va")), "query_id"
-    ).join(
-        v.select(F.col("did").alias("neighbor_id"), F.col("v").alias("vb")),
-        "neighbor_id",
-    )
-    return _ranked(pairs, M.cosine_similarity("va", "vb"), k, ascending=False)
+    pairs = _pair_cosines(cand, emb, id_col, vec_col, ("query_id", "neighbor_id"))
+    return _ranked(pairs, F.col("cos"), k, ascending=False)

@@ -306,6 +306,7 @@ def update_dedup(
     # ids already indexed are skipped (duplicate-insert warn+skip contract,
     # reference impls/nn_index/faiss.py:590-598)
     old_sigs = prior.tables["signatures"]
+    old_ids = old_sigs.select("doc_id")
     # pre-r5 checkpoint compatibility (mirrors run_dedup's fallback, ADVICE
     # r5): a signatures table resumed from a checkpoint predating the sha256
     # column would make the unionByName below fail — and allowMissingColumns
@@ -314,10 +315,10 @@ def update_dedup(
     # run_dedup's member_map fallback pays on such checkpoints).
     if "sha256" not in old_sigs.columns:
         old_shas = X.with_sha256(
-            base.join(old_sigs.select("doc_id"), "doc_id", "left_semi")
+            base.join(old_ids, "doc_id", "left_semi")
         ).select("doc_id", "sha256")
         old_sigs = old_sigs.join(old_shas, "doc_id")
-    new_docs = new_docs.join(old_sigs.select("doc_id"), "doc_id", "left_anti")
+    new_docs = new_docs.join(old_ids, "doc_id", "left_anti")
     new_sigs = compute_signatures(
         new_docs, cfg, include=("simhash", "bands", "sha256")
     )
@@ -335,14 +336,11 @@ def update_dedup(
 
     # candidate pairs touching at least one NEW doc: semi-join the bucket
     # table to buckets that gained a new member, then pair-generate only
-    # within those buckets
+    # within those buckets. The new representatives' bands are read from
+    # the checkpointed sigs_all, so the signature pass runs only once.
     buckets = band_buckets(sigs, cfg)
-    new_rep_ids = new_ids.join(reps_ids, "doc_id", "left_semi")
-    touched = (
-        band_buckets(new_sigs.join(new_rep_ids, "doc_id", "left_semi"), cfg)
-        .select("band_hash")
-        .distinct()
-    )
+    new_reps = sigs.join(old_ids, "doc_id", "left_anti")
+    touched = band_buckets(new_reps, cfg).select("band_hash").distinct()
     touched_buckets = buckets.join(touched, "band_hash", "left_semi")
     old_pairs = prior.tables["dup_pairs"].select("a", "b", "jaccard")
     # drop pairs already verified last round (old x old in a touched bucket)

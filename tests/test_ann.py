@@ -144,26 +144,13 @@ def test_pair_cosines_bcast_matches_catalyst(spark, emb):
     # bit-identical to the joined-array Catalyst cosine on the same pairs.
     from pyspark.sql import functions as F2
 
-    from smqtk_indexing_spark.functions import metrics as M
-
     df, _ = emb
     cand = (
         df.select(F2.col("vec_id").alias("a"))
         .crossJoin(df.select(F2.col("vec_id").alias("b")))
         .where((F2.col("a") < F2.col("b")) & (F2.col("b") - F2.col("a") < 7))
     )
-    v = df.select(F2.col("vec_id").alias("did"), F2.col("embedding").alias("v"))
-    old = sorted(
-        map(
-            tuple,
-            cand.join(
-                v.select(F2.col("did").alias("a"), F2.col("v").alias("va")), "a"
-            )
-            .join(v.select(F2.col("did").alias("b"), F2.col("v").alias("vb")), "b")
-            .select("a", "b", M.cosine_similarity("va", "vb").alias("cos"))
-            .collect(),
-        )
-    )
+    old = sorted(map(tuple, ann._pair_cosines(cand, df).collect()))
     new = sorted(map(tuple, ann._pair_cosines_bcast(cand, df).collect()))
     assert old == new
 
@@ -499,3 +486,43 @@ def test_rp_lsh_topk_empty_table_returns_empty(spark):
     df = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert ann.rp_lsh_topk(df, k=3).collect() == []
     assert ann.cosine_topk(df, k=3).collect() == []
+
+
+def test_zero_vector_cosine_is_null_not_an_error(spark):
+    # Spark 4 runs with ANSI on: a zero-norm vector must score NULL (as
+    # DuckDB's 0.0/0.0 and the broadcast scorer do), not raise
+    # DIVIDE_BY_ZERO, on every Catalyst cosine path
+    from smqtk_indexing_spark.functions import metrics as M
+    from smqtk_indexing_spark.operators.mrpt import mrpt_topk
+
+    rng = np.random.default_rng(17)
+    vecs = rng.standard_normal((60, 8))
+    vecs[0] = 0.0
+    df = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    for name, topk in [
+        ("ivf", ann.ivf_topk(df, k=3, n_cells=4, nprobe=2, seed=3)),
+        ("mrpt", mrpt_topk(df, k=3, n_trees=4, depth=2, seed=3)),
+        ("rp_lsh", ann.rp_lsh_topk(df, k=3)),
+    ]:
+        rows = topk.collect()
+        assert any(r.query_id == 0 for r in rows) or name == "rp_lsh", name
+        for r in rows:
+            assert (r.score is None) == (0 in (r.query_id, r.neighbor_id)), name
+
+    pairs = ann.cosine_dup_pairs(df, tau=-1.0).collect()
+    assert len(pairs) == 59 * 58 // 2  # every pair but the zero vector's
+    banded = ann.cosine_dup_pairs_banded(df, tau=-1.0).collect()
+    assert all(0 not in (r.a, r.b) for r in banded)
+
+    z = F.array(F.lit(0.0), F.lit(0.0))
+    x = F.array(F.lit(1.0), F.lit(0.0))
+    got = df.limit(1).select(
+        M.cosine_similarity(z, x).alias("sim"),
+        M.cosine_distance(z, x).alias("dist"),
+        M.cosine_distance(x, x).alias("self_dist"),
+    ).first()
+    assert got.sim is None and got.dist is None
+    assert got.self_dist == 0.0

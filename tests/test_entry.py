@@ -52,8 +52,7 @@ def test_whitespace_ratio_vertical_tab_matches_oracle(spark):
     assert got == want == 4 / 7
 
 
-@pytest.mark.parametrize("name", FAST_ORACLE_QUERIES)
-def test_fast_queries_match_duckdb_sf0001(spark, name, sf001_dir):
+def _assert_matches_duckdb(spark, name, sf001_dir):
     import math
 
     df = E.queries()[name](spark, sf001_dir)
@@ -74,6 +73,18 @@ def test_fast_queries_match_duckdb_sf0001(spark, name, sf001_dir):
 
     assert sorted(cols) == sorted(ocols)
     assert norm(cols, rows) == norm(ocols, orows)
+
+
+@pytest.mark.parametrize("name", FAST_ORACLE_QUERIES)
+def test_fast_queries_match_duckdb_sf0001(spark, name, sf001_dir):
+    _assert_matches_duckdb(spark, name, sf001_dir)
+
+
+@pytest.mark.parametrize("name", E.TOPK_CERTS)
+def test_topk_certificates_match_duckdb_sf0001(spark, name, sf001_dir):
+    # the seven top-k certificates share one body (_topk_certificate) and
+    # one oracle: k rows per query, no score mismatch, no rank violation
+    _assert_matches_duckdb(spark, name, sf001_dir)
 
 
 def _reset_memos():

@@ -98,3 +98,31 @@ def test_update_dedup_lineage_rows_match_tables(spark):
     for stage, rows_out, *_rest in updated.lineage:
         assert rows_out == updated.tables[stage].count(), stage
     assert updated.lineage[1][1] == len(files)  # member_map covers the corpus
+
+
+def test_update_dedup_runs_signature_pass_once(spark, monkeypatch):
+    # the buckets a new batch touches are read from the checkpointed
+    # signature table; a lazy second run of the new batch's signature pass
+    # would push every new doc through it twice
+    from smqtk_indexing_spark.plans import pipeline as P
+
+    files, _ = synth_files(n=200, seed=37)
+    full_df = spark.createDataFrame(files)
+    prior = run_dedup(spark, spark.createDataFrame(files.iloc[:150]), CFG)
+    new_ids = spark.createDataFrame(
+        [(int(i),) for i in files.iloc[150:]["doc_id"]], "doc_id long"
+    )
+    seen = spark.sparkContext.accumulator(0)
+    real = P.compute_signatures
+
+    def tapped(df, cfg, **kw):
+        def count_rows(batches):
+            for b in batches:
+                seen.add(len(b))
+                yield b
+
+        return real(df.mapInPandas(count_rows, schema=df.schema), cfg, **kw)
+
+    monkeypatch.setattr(P, "compute_signatures", tapped)
+    update_dedup(spark, full_df, new_ids, prior, CFG)
+    assert seen.value == 50
