@@ -16,8 +16,10 @@ import os
 import time
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from smqtk_indexing_spark.config import DedupConfig
 from smqtk_indexing_spark.functions import metrics as M
@@ -57,12 +59,25 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema job: for a single
+    file the footer's schema is passed, so Spark does not run a 1-task job
+    to infer it. A footer timestamp with no time zone maps to
+    ``timestamp_ntz``, as Spark infers it (the footer equals Spark's
+    inference for every table at every SF: checked in tier-1). A directory
+    (a Spark-written table) is read as before."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _spread(spark, _read(spark, f"{sf_dir}/documents.parquet"))
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return _spread(spark, _read(spark, f"{sf_dir}/embeddings.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -169,7 +184,8 @@ def _full_dedup_all(spark, sf_dir: str) -> DataFrame:
 
 
 def _docs_count(spark, sf_dir: str) -> int:
-    """Memoized corpus row count (parquet metadata count — no data scan).
+    """Memoized corpus row count (parquet metadata count — no data scan;
+    for a single file the footer's, with no Spark job at all).
     Bounds id sets for size-gated broadcasts (the verify fetch);
     testdata is immutable per the driver contract, so the count is a pure
     function of sf_dir alone — keyed by path only (ADVICE r5: an id()-based
@@ -178,11 +194,14 @@ def _docs_count(spark, sf_dir: str) -> int:
     construction)."""
     n = _DOCS_COUNT_MEMO.get(sf_dir)
     if n is None:
-        # raw read, not _docs(): the count folds to parquet row-group
-        # metadata with no repartition in the plan
-        n = _DOCS_COUNT_MEMO[sf_dir] = spark.read.parquet(
-            f"{sf_dir}/documents.parquet"
-        ).count()
+        path = f"{sf_dir}/documents.parquet"
+        if os.path.isfile(path):
+            n = pq.read_metadata(path).num_rows
+        else:
+            # raw read, not _docs(): the count folds to parquet row-group
+            # metadata with no repartition in the plan
+            n = spark.read.parquet(path).count()
+        _DOCS_COUNT_MEMO[sf_dir] = n
     return n
 
 
@@ -805,7 +824,7 @@ def q_token_freq_topk(spark, sf_dir):
 
 
 def _events(spark, sf_dir):
-    return _spread(spark, spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return _spread(spark, _read(spark, f"{sf_dir}/events.parquet"))
 
 
 def q_events_windowed_dedup(spark, sf_dir):
@@ -935,7 +954,7 @@ def q_streaming_windowed_first(spark, sf_dir):
     # state carried across batches, not by one final no-data batch — while
     # staying oracle-equal (sorted split => nothing is ever late-dropped)
     in_dir, sink, ck = _stage_stream_input(f"{sf_dir}/events.parquet", "ts")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _read(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -976,7 +995,7 @@ def q_streaming_first_seen(spark, sf_dir):
     in_dir, sink, ck = _stage_stream_input(
         f"{sf_dir}/documents.parquet", "doc_id"
     )
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = _read(spark, f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

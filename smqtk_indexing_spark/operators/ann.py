@@ -85,7 +85,8 @@ def _bruteforce_topk_blocked(
     seq_self_norms, which reproduce the Catalyst fold's IEEE rounding
     sequence bit-for-bit (see that docstring), so ranks, 6-decimal rounded
     scores, and tie-breaks (score order, then neighbor_id asc — NaN scores
-    sort as Spark's NaN-greatest) are unchanged. Verified by exact
+    sort as Spark's NaN-greatest, a zero-norm cosine is NULL and sorts
+    last, as in DuckDB's oracle) are unchanged. Verified by exact
     old-vs-new rowset equality at sf0.001/0.01/0.1/1.0 and the DuckDB
     oracle gate (OPTIMIZATION_r07.md).
 
@@ -140,16 +141,24 @@ def _bruteforce_topk_blocked(
                 pool_k: list = []
                 pool_s: list = []
                 pool_i: list = []
+                pool_n: list = []
                 for ts in range(0, n, x_tile):
                     te = min(ts + x_tile, n)
                     sc = K.seq_score_block(q, xm[ts:te], measure)
+                    null = np.zeros(sc.shape, dtype=bool)
                     if measure == "cosine":
-                        sc = sc / (nq[:, None] * nx[ts:te][None, :])
+                        # a zero norm scores NULL, as M.cosine_similarity's
+                        # try_divide and DuckDB's x / 0
+                        den = nq[:, None] * nx[ts:te][None, :]
+                        null = den == 0
+                        sc = sc / np.where(null, 1.0, den)
                     # ascending sort key; Spark orders NaN greatest (=>
-                    # first under desc, last under asc); ties break on
-                    # neighbor_id asc via the stable sorts
+                    # first under desc, last under asc) and a NULL score
+                    # after every score (the oracle's NULLS LAST); ties
+                    # break on neighbor_id asc via the stable sorts
                     key = sc.copy() if ascending else -sc
                     key[np.isnan(key)] = np.inf if ascending else -np.inf
+                    key[null] = np.inf
                     # self pairs: NaN, which the stable argsort places
                     # strictly after every score sentinel, +inf included
                     key[qids[:, None] == cids[ts:te][None, :]] = np.nan
@@ -158,9 +167,11 @@ def _bruteforce_topk_blocked(
                     pool_k.append(key[rows, ordt])
                     pool_s.append(sc[rows, ordt])
                     pool_i.append(cids[ts:te][ordt])
+                    pool_n.append(null[rows, ordt])
                 keys = np.concatenate(pool_k, axis=1)
                 scs = np.concatenate(pool_s, axis=1)
                 nids = np.concatenate(pool_i, axis=1)
+                nulls = np.concatenate(pool_n, axis=1)
                 ordf = np.argsort(keys, axis=1, kind="stable")[:, :kk]
                 yield pd.DataFrame(
                     {
@@ -170,15 +181,18 @@ def _bruteforce_topk_blocked(
                             np.arange(1, kk + 1, dtype=np.int32), m
                         ),
                         "score": scs[rows, ordf].ravel(),
+                        "null_score": nulls[rows, ordf].ravel(),
                     }
                 )
 
     out = base.mapInPandas(
-        gen, schema="query_id long, neighbor_id long, rank int, score double"
+        gen,
+        schema="query_id long, neighbor_id long, rank int, score double, "
+        "null_score boolean",
     )
-    # the pandas -> Arrow handoff turns a NaN score into null; every row
-    # has a score, so null can only be NaN
-    score = F.coalesce("score", F.lit(float("nan")))
+    # the pandas -> Arrow handoff turns a NaN score into null; outside the
+    # flagged NULL scores, null can only be NaN
+    score = F.when(~F.col("null_score"), F.coalesce("score", F.lit(float("nan"))))
     return out.select(
         "query_id", "neighbor_id", "rank", F.round(score, 6).alias("score")
     )

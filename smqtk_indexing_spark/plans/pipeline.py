@@ -22,7 +22,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from smqtk_indexing_spark.config import DedupConfig
@@ -128,15 +128,23 @@ class Checkpointer:
         resumed = self._complete(stage)
         if resumed:
             df = self.spark.read.parquet(self._path(stage))
-        else:
+            rows = df.count()
+        elif self.out_dir:
+            # the write is the only action: it counts its rows through an
+            # Observation, and the read-back is given the written schema
+            # (no 1-task schema job, no 2-job count of the re-read table)
             df = build()
-            if self.out_dir:
-                df.write.mode("overwrite").parquet(self._path(stage))
-                df = self.spark.read.parquet(self._path(stage))
-            else:
-                df = df.localCheckpoint(eager=False)
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(self._path(stage))
+            rows = obs.get["rows"]
+            df = self.spark.read.schema(df.schema).parquet(self._path(stage))
+        else:
+            df = build().localCheckpoint(eager=False)
+            rows = df.count()
         result.lineage.append(
-            (stage, df.count(), df.rdd.getNumPartitions(),
+            (stage, rows, df.rdd.getNumPartitions(),
              int((time.time() - t0) * 1000), self.cfg.config_hash, resumed)
         )
         if cleanup is not None and not resumed:

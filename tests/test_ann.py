@@ -526,3 +526,30 @@ def test_zero_vector_cosine_is_null_not_an_error(spark):
     ).first()
     assert got.sim is None and got.dist is None
     assert got.self_dist == 0.0
+
+
+def test_blocked_cosine_topk_ranks_zero_vector_last_like_duckdb(spark):
+    # a zero vector's cosine is NULL in DuckDB's oracle (x / 0), which
+    # ranks it after every score; the blocked kernel once scored it NaN and
+    # ranked it first for every query (NaN sorts greatest under desc)
+    import os
+    import sys
+
+    import duckdb
+    import pandas as pd
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as E
+
+    rng = np.random.default_rng(23)
+    vecs = rng.standard_normal((20, 8)).astype(np.float32)
+    vecs[0] = 0.0
+    embeddings = pd.DataFrame({"vec_id": np.arange(20), "embedding": list(vecs)})  # noqa: F841
+    df = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(20)], "vec_id long, embedding array<float>"
+    )
+    got = [tuple(r) for r in ann.cosine_topk(df, k=E.TOPK).collect()]
+    want = duckdb.execute(E.oracle_sql()["ann_cosine_topk"]).fetchall()
+    norm = lambda rs: sorted((q, n, r, None if s is None else f"{s:.9g}") for q, n, r, s in rs)  # noqa: E731
+    assert norm(got) == norm(want)
+    assert all(s is None for q, n, _, s in got if 0 in (q, n))

@@ -137,3 +137,24 @@ def test_pair_memo_materializes_once_and_resets(spark, sf001_dir):
     _reset_memos()
     again, _ = _jobs(spark, "memo_lsh_again", lsh)
     assert again == warm
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_and_count_match_spark_without_a_job(spark, sf, sf001_dir):
+    # _read passes the parquet footer's schema and _docs_count reads the
+    # footer's row count: both must equal what Spark infers and counts,
+    # and neither may run a Spark job
+    sf_dir = os.path.join(os.path.dirname(sf001_dir), sf)
+    sc = spark.sparkContext
+    group = f"footer_{sf}"
+    E._DOCS_COUNT_MEMO.pop(sf_dir, None)
+    sc.setJobGroup(group, group)
+    try:
+        read = {t: E._read(spark, f"{sf_dir}/{t}.parquet") for t in ("documents", "embeddings", "events")}
+        n = E._docs_count(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    for t, df in read.items():
+        assert df.schema == spark.read.parquet(f"{sf_dir}/{t}.parquet").schema, t
+    assert n == spark.read.parquet(f"{sf_dir}/documents.parquet").count()

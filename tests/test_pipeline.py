@@ -114,6 +114,11 @@ def test_checkpoint_resume_and_lineage(spark, corpus, tmp_path):
 
     r2 = run_dedup(spark, df, CFG, out_dir=out)
     assert all(row[5] for row in r2.lineage)  # everything resumed
+    # a fresh stage counts its rows through the write's Observation, a
+    # resumed one by count(): both must be the table's row count
+    for r in (r1, r2):
+        for stage, rows_out, *_rest in r.lineage:
+            assert rows_out == r.tables[stage].count(), stage
     c1 = {(r.doc_id, r.cluster_id) for r in r1.tables["clusters"].collect()}
     c2 = {(r.doc_id, r.cluster_id) for r in r2.tables["clusters"].collect()}
     assert c1 == c2
