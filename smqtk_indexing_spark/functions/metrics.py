@@ -104,12 +104,6 @@ def jaccard_arrays(a, b) -> Column:
     return inter / (F.size(a) + F.size(b) - inter).cast("double")
 
 
-def containment_arrays(a, b) -> Column:
-    """|A ∩ B| / |A| — shingle-containment score for substring candidates."""
-    a, b = _to_col(a), _to_col(b)
-    return F.size(F.array_intersect(a, b)).cast("double") / F.size(a).cast("double")
-
-
 def minhash_agreement(a, b) -> Column:
     """Fraction of agreeing MinHash permutations — unbiased Jaccard
     estimate; Hamming-as-proxy analog (interfaces/hash_index.py:92-94)."""

@@ -62,13 +62,6 @@ def stopword_ratio(col) -> Column:
     return F.when(F.size(t) > 0, hits.cast("double") / F.size(t)).otherwise(F.lit(0.0))
 
 
-def punct_ratio(col) -> Column:
-    c = _to_col(col)
-    n = F.length(c)
-    p = F.length(F.regexp_replace(c, r"[^\p{Punct}]", ""))
-    return F.when(n > 0, p.cast("double") / n).otherwise(F.lit(0.0))
-
-
 def whitespace_ratio(col) -> Column:
     # explicit negated ASCII class, NOT [^\s]: Java \s includes \x0B while
     # RE2's does not, so the shared class keeps this twin byte-identical to

@@ -829,7 +829,7 @@ def mrpt_fit(
     """Train on a sample: returns (bases (t, depth, d), splits (t, 2^depth-1)).
 
     Splits are per-node medians of the level projection over the sample rows
-    that reach the node — the reference's argpartition median
+    that reach the node — the reference's partition-based median
     (``mrpt.py:333-343``) computed level-by-level.
 
     Driver cost (VERDICT r5 item 8): the per-node median loop is
@@ -996,6 +996,99 @@ def seq_self_norms(x: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+# ---------------------------------------------------------------------------
+# Exact top-k — the engine's one numpy top-k selection, in the oracle's
+# (score, neighbor_id) order: the brute-force measures and both balltree
+# forms (operators/ann.py, operators/balltree.py) through exact_topk, the
+# IVF probes (kmeans_assign) through topk_select. The Spark-ranked twin is
+# operators/ann.py::_ranked.
+# ---------------------------------------------------------------------------
+
+def topk_select(
+    key: np.ndarray, ids: np.ndarray, k: int, group: np.ndarray | None = None
+) -> np.ndarray:
+    """(m, n) ascending sort keys -> (m, min(k, n)) column indices of each
+    row's first ``k`` entries in (``group``, key, id) order. Ties break on
+    the smaller id, never on position (a partial sort's order among ties
+    is arbitrary). ``ids`` is (n,) or (m, n); ``group`` (int, the
+    shape of ``key``) ranks whole classes of entries before or after the
+    keys; a NaN key sorts after every number."""
+    ids = np.broadcast_to(ids, key.shape)
+    keys = (ids, key) if group is None else (ids, key, group)
+    return np.lexsort(keys, axis=1)[:, : min(k, key.shape[1])]
+
+
+# exact_topk's sort groups: Spark orders NaN greatest, so first under a
+# descending measure and after every number under an ascending one; a NULL
+# score (zero-norm cosine) ranks after every score, as the oracle's NULLS
+# LAST; a self pair ranks after everything and is dropped
+_NAN_DESC, _SCORED, _NAN_ASC, _NULL, _SELF = range(5)
+
+
+def exact_topk(
+    q: np.ndarray,
+    qids: np.ndarray,
+    x: np.ndarray,
+    xids: np.ndarray,
+    k: int,
+    measure: str,
+) -> dict:
+    """Exact top-k of each query row against a corpus block, self pairs
+    excluded: per query the best ``k`` neighbors by (score, neighbor_id),
+    'cosine' descending, 'euclidean' and 'hik' ascending.
+
+    Scores come from :func:`seq_score_block` (and :func:`seq_self_norms`
+    for cosine), bit-identical to the Catalyst fold; a zero-norm cosine is
+    NULL (``null_score``), as ``try_divide`` and DuckDB's ``x / 0``. The
+    order is Spark's: NaN greatest, NULL after every score, ties by id.
+
+    Queries run in blocks of 64 rows and the corpus in tiles of 512
+    columns; each tile keeps its best ``k`` by :func:`topk_select` and the
+    pools merge once per query block, so the (m, n) score matrix is never
+    materialized. Any global top-k entry is in its tile's top-k under the
+    same order, so the merge is exact.
+
+    Returns long-form columns ``query_id``, ``neighbor_id``, ``rank``
+    (1-based), ``score`` and ``null_score``.
+    """
+    q_block, x_tile = 64, 512
+    qids = np.asarray(qids, dtype=np.int64)
+    xids = np.asarray(xids, dtype=np.int64)
+    kk = min(k, len(xids))
+    desc = measure == "cosine"
+    nx = seq_self_norms(x) if desc and kk > 0 else None
+    parts = [tuple(np.empty(0, t) for t in (np.int64, np.int64, np.int32, float, bool))]
+    for s in range(0, len(qids) if kk > 0 else 0, q_block):
+        qb, qi = q[s : s + q_block], qids[s : s + q_block]
+        nq = seq_self_norms(qb) if desc else None
+        pools = []
+        for ts in range(0, len(xids), x_tile):
+            tids = xids[ts : ts + x_tile]
+            sc = seq_score_block(qb, x[ts : ts + x_tile], measure)
+            null = np.zeros(sc.shape, dtype=bool)
+            if desc:
+                den = nq[:, None] * nx[None, ts : ts + x_tile]
+                null = den == 0
+                sc = sc / np.where(null, 1.0, den)
+            grp = np.where(np.isnan(sc), _NAN_DESC if desc else _NAN_ASC, _SCORED)
+            grp[null] = _NULL
+            grp[qi[:, None] == tids[None, :]] = _SELF
+            key = np.where(grp == _SCORED, -sc if desc else sc, 0.0)
+            sel = topk_select(key, tids, kk, grp)
+            tile = (grp, key, np.broadcast_to(tids, sc.shape), sc)
+            pools.append([np.take_along_axis(a, sel, axis=1) for a in tile])
+        grp, key, nid, sc = (np.concatenate(p, axis=1) for p in zip(*pools))
+        sel = topk_select(key, nid, kk, grp)
+        grp, nid, sc = (np.take_along_axis(a, sel, axis=1) for a in (grp, nid, sc))
+        keep = grp != _SELF
+        # self pairs sort last, so the kept entries are a prefix of each row
+        rank = np.broadcast_to(np.arange(1, kk + 1, dtype=np.int32), sel.shape)
+        qid = np.broadcast_to(qi[:, None], sel.shape)
+        parts.append((qid[keep], nid[keep], rank[keep], sc[keep], grp[keep] == _NULL))
+    names = ("query_id", "neighbor_id", "rank", "score", "null_score")
+    return {n: np.concatenate(c) for n, c in zip(names, zip(*parts))}
+
+
 def sha256_hex(text: str) -> str:
     """Per-row content invariant (BASELINE.json input_hint): must equal both
     Spark's ``sha2(encode(content,'utf-8'),256)`` and DuckDB's ``sha256``."""
@@ -1054,15 +1147,11 @@ def kmeans_fit(
 
 def kmeans_assign(x: np.ndarray, cent: np.ndarray, nprobe: int = 1) -> np.ndarray:
     """(n, d) rows -> (n, nprobe) nearest-centroid indices (ascending
-    distance; column 0 is the home cell)."""
+    distance, ties by cell index; column 0 is the home cell)."""
     x = np.asarray(x, dtype=np.float64)
     d2 = (
         (x * x).sum(axis=1)[:, None]
         - 2.0 * (x @ cent.T)
         + (cent * cent).sum(axis=1)[None, :]
     )
-    nprobe = min(nprobe, cent.shape[0])
-    idx = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
-    rows = np.arange(x.shape[0])[:, None]
-    order = np.argsort(d2[rows, idx], axis=1, kind="stable")
-    return idx[rows, order]
+    return topk_select(d2, np.arange(cent.shape[0]), nprobe)

@@ -4,15 +4,20 @@ nearest_neighbor_index.py:96-118``) generalized to batch top-k DataFrames.
 
 - brute-force top-k: the correctness baseline, = the reference's
   ``LinearHashIndex`` scan (``impls/hash_index/linear.py:231-244``) with
-  Catalyst's TakeOrdered/window-rank instead of ``heapq.nsmallest``.
+  ``kernels.exact_topk`` over a broadcast corpus matrix instead of
+  ``heapq.nsmallest``.
 - RP-LSH bucketed top-k: the scale path — 64-bit sign-of-projection
   signatures (``impls/lsh_functor/simple_rp.py:122-127`` semantics) banded
   into Hamming buckets for candidate generation, exact re-rank after
   (``impls/nn_index/lsh.py:505-519`` shape).
 
-All ranking math is Catalyst expressions; only the signature projection is a
-pandas UDF (matmul over Arrow batches — ``impls/nn_index/mrpt.py:243-266``
-shape).
+Every exact score is the Catalyst fold's, bit for bit: Catalyst expressions
+(``functions/metrics.py``) on the join paths, ``kernels.seq_score_block`` in
+the pandas UDFs over a broadcast corpus matrix. Every top-k has one order,
+(score, neighbor_id), with Spark's NaN-greatest and a NULL cosine last: the
+Spark-ranked paths take it from :func:`_ranked`, brute force and balltree
+from ``kernels.exact_topk``. Signatures are pandas UDFs (matmul over Arrow
+batches — ``impls/nn_index/mrpt.py:243-266`` shape).
 """
 
 from __future__ import annotations
@@ -56,145 +61,61 @@ def _self_pairs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _bruteforce_topk_blocked(
-    emb: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    measure: str,
-    ascending: bool,
-    q_block: int = 64,
-) -> DataFrame:
-    """Exact brute-force self top-k via blocked vectorized scoring against a
-    broadcast corpus matrix — identical results to the previous
-    crossJoin + interpreted ``aggregate(zip_with(...))`` + window-rank plan,
-    at a fraction of the cost (guide §4.2: hand whole batches to native
-    code; §1.2: remove the n^2-row window shuffle outright).
+TOPK_SCHEMA = (
+    "query_id long, neighbor_id long, rank int, score double, null_score boolean"
+)
 
-    Plan shape change (plans/r07): the old plan materialized n^2 rows
-    through a BroadcastNestedLoopJoin, evaluated one INTERPRETED lambda
-    fold per pair (F.aggregate with lambdas gets no codegen), and shuffled
-    the pair table into a WindowGroupLimit sort. The new plan is a single
-    ArrowEvalPython-class pass over the query side: the corpus rides along
-    once as an (ids, matrix) broadcast — the SAME bytes the old
-    BroadcastExchange already collected to the driver and shipped to every
-    executor, so the driver-memory envelope is unchanged — and each task
-    emits only its queries' k winners (n*k rows instead of n^2).
 
-    Exactness contract: scores come from kernels.seq_score_block /
-    seq_self_norms, which reproduce the Catalyst fold's IEEE rounding
-    sequence bit-for-bit (see that docstring), so ranks, 6-decimal rounded
-    scores, and tie-breaks (score order, then neighbor_id asc — NaN scores
-    sort as Spark's NaN-greatest, a zero-norm cosine is NULL and sorts
-    last, as in DuckDB's oracle) are unchanged. Verified by exact
-    old-vs-new rowset equality at sf0.001/0.01/0.1/1.0 and the DuckDB
-    oracle gate (OPTIMIZATION_r07.md).
+def _kernel_score() -> Column:
+    """The ``score`` of a :func:`K.exact_topk` row, repaired: the pandas ->
+    Arrow handoff turns a NaN score into null, and outside the flagged NULL
+    scores (a zero-norm cosine) a null can only be NaN."""
+    return F.when(~F.col("null_score"), F.coalesce("score", F.lit(float("nan"))))
 
-    This is the O(n^2) correctness baseline by design (the certified scale
-    paths are rp_lsh/ivf/mrpt); the corpus matrix must fit one executor,
-    exactly as the previous broadcast relation had to.
-    """
-    spark = emb.sparkSession
-    base = emb.select(
+
+def _broadcast_corpus(emb: DataFrame, id_col: str, vec_col: str):
+    """Collect the corpus once and broadcast it as (ids ascending, (n, d)
+    float64 matrix) — the one corpus collect of the broadcast ANN paths.
+    An empty corpus gives a (0, 0) matrix."""
+    pdf = emb.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+    ).toPandas()
+    ids = pdf["id"].to_numpy(np.int64)
+    order = np.argsort(ids)
+    x_mat = (
+        np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
+        if len(pdf) else np.zeros((0, 0))
     )
-    pdf = base.toPandas()  # Arrow path; same relation the old plan broadcast
-    ids_u = pdf["id"].to_numpy(np.int64)
-    # id-SORTED corpus: tiles are then consecutive id ranges, so the
-    # stable per-tile selection below breaks ties in global id order
-    order = np.argsort(ids_u)
-    ids_c = ids_u[order]
-    x_mat = np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
-    bc = spark.sparkContext.broadcast((ids_c, x_mat))
-    kk = min(k, len(ids_c) - 1)
-    x_tile = 512
+    return emb.sparkSession.sparkContext.broadcast((ids[order], x_mat))
+
+
+def _bruteforce_topk_blocked(
+    emb: DataFrame, k: int, id_col: str, vec_col: str, measure: str
+) -> DataFrame:
+    """Exact brute-force self top-k: each task scores its query rows
+    against the broadcast corpus matrix with :func:`K.exact_topk` and emits
+    only their k winners (n*k rows, never the n^2 pair table). Scores,
+    6-decimal roundings and the (score, neighbor_id) order equal the
+    Catalyst plan's and the DuckDB oracle's (see that kernel).
+
+    This is the O(n^2) correctness baseline by design (the scale paths are
+    rp_lsh/ivf/mrpt); the corpus matrix must fit one executor.
+    """
+    bc = _broadcast_corpus(emb, id_col, vec_col)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cids, xm = bc.value
-        n = len(cids)
-        if kk <= 0:
-            return
-        nx = K.seq_self_norms(xm) if measure == "cosine" else None
-        rows_cache: dict = {}
         for b in batches:
-            qids_all = b["id"].to_numpy(np.int64)
-            q_all = np.asarray(b["v"].tolist(), dtype=np.float64)
-            for s in range(0, len(qids_all), q_block):
-                qids = qids_all[s : s + q_block]
-                q = q_all[s : s + q_block]
-                m = len(qids)
-                rows = rows_cache.get(m)
-                if rows is None:
-                    rows = rows_cache[m] = np.arange(m)[:, None]
-                nq = K.seq_self_norms(q) if measure == "cosine" else None
-                # Tile-wise selection: per corpus tile, keep each query's
-                # kk best by (key, neighbor_id) and merge pools at the end
-                # — the full (m, n) score/key matrices are never
-                # materialized, cutting the kernel's DRAM traffic by ~n/kk
-                # (this stage was measured 4x slower in the VM's
-                # bandwidth-contended windows at zero CPU steal). A stable
-                # argsort over id-ordered tile columns == (key, id)
-                # lexicographic, and any global top-kk entry is within its
-                # tile's top-kk under the same comparator, so the merged
-                # result is exactly the previous full-matrix selection
-                # (old-vs-new rowset equality re-verified at all four SFs).
-                pool_k: list = []
-                pool_s: list = []
-                pool_i: list = []
-                pool_n: list = []
-                for ts in range(0, n, x_tile):
-                    te = min(ts + x_tile, n)
-                    sc = K.seq_score_block(q, xm[ts:te], measure)
-                    null = np.zeros(sc.shape, dtype=bool)
-                    if measure == "cosine":
-                        # a zero norm scores NULL, as M.cosine_similarity's
-                        # try_divide and DuckDB's x / 0
-                        den = nq[:, None] * nx[ts:te][None, :]
-                        null = den == 0
-                        sc = sc / np.where(null, 1.0, den)
-                    # ascending sort key; Spark orders NaN greatest (=>
-                    # first under desc, last under asc) and a NULL score
-                    # after every score (the oracle's NULLS LAST); ties
-                    # break on neighbor_id asc via the stable sorts
-                    key = sc.copy() if ascending else -sc
-                    key[np.isnan(key)] = np.inf if ascending else -np.inf
-                    key[null] = np.inf
-                    # self pairs: NaN, which the stable argsort places
-                    # strictly after every score sentinel, +inf included
-                    key[qids[:, None] == cids[ts:te][None, :]] = np.nan
-                    kk2 = min(kk, te - ts)
-                    ordt = np.argsort(key, axis=1, kind="stable")[:, :kk2]
-                    pool_k.append(key[rows, ordt])
-                    pool_s.append(sc[rows, ordt])
-                    pool_i.append(cids[ts:te][ordt])
-                    pool_n.append(null[rows, ordt])
-                keys = np.concatenate(pool_k, axis=1)
-                scs = np.concatenate(pool_s, axis=1)
-                nids = np.concatenate(pool_i, axis=1)
-                nulls = np.concatenate(pool_n, axis=1)
-                ordf = np.argsort(keys, axis=1, kind="stable")[:, :kk]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, kk),
-                        "neighbor_id": nids[rows, ordf].ravel(),
-                        "rank": np.tile(
-                            np.arange(1, kk + 1, dtype=np.int32), m
-                        ),
-                        "score": scs[rows, ordf].ravel(),
-                        "null_score": nulls[rows, ordf].ravel(),
-                    }
-                )
+            q = np.asarray(b["v"].tolist(), dtype=np.float64)
+            yield pd.DataFrame(
+                K.exact_topk(q, b["id"].to_numpy(np.int64), xm, cids, k, measure)
+            )
 
-    out = base.mapInPandas(
-        gen,
-        schema="query_id long, neighbor_id long, rank int, score double, "
-        "null_score boolean",
-    )
-    # the pandas -> Arrow handoff turns a NaN score into null; outside the
-    # flagged NULL scores, null can only be NaN
-    score = F.when(~F.col("null_score"), F.coalesce("score", F.lit(float("nan"))))
+    out = emb.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+    ).mapInPandas(gen, schema=TOPK_SCHEMA)
     return out.select(
-        "query_id", "neighbor_id", "rank", F.round(score, 6).alias("score")
+        "query_id", "neighbor_id", "rank", F.round(_kernel_score(), 6).alias("score")
     )
 
 
@@ -203,7 +124,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force all-pairs cosine top-k (descending similarity), blocked
     exact scoring (see :func:`_bruteforce_topk_blocked`)."""
-    return _bruteforce_topk_blocked(emb, k, id_col, vec_col, "cosine", False)
+    return _bruteforce_topk_blocked(emb, k, id_col, vec_col, "cosine")
 
 
 def euclidean_topk(
@@ -211,7 +132,7 @@ def euclidean_topk(
 ) -> DataFrame:
     """Brute-force euclidean top-k — ``utils/metrics.py:73-86`` ranking,
     blocked exact scoring (see :func:`_bruteforce_topk_blocked`)."""
-    return _bruteforce_topk_blocked(emb, k, id_col, vec_col, "euclidean", True)
+    return _bruteforce_topk_blocked(emb, k, id_col, vec_col, "euclidean")
 
 
 def hik_topk(
@@ -220,7 +141,7 @@ def hik_topk(
     """Histogram-intersection-distance top-k — ``utils/metrics.py:7-70``
     ranking (the FLANN HIK path, ``impls/nn_index/flann.py:467-474``),
     blocked exact scoring (see :func:`_bruteforce_topk_blocked`)."""
-    return _bruteforce_topk_blocked(emb, k, id_col, vec_col, "hik", True)
+    return _bruteforce_topk_blocked(emb, k, id_col, vec_col, "hik")
 
 
 RP_SIG_SCHEMA = "vec_id long, rp_sig long"
@@ -409,27 +330,15 @@ def _pair_cosines_bcast(
     fold (kernels.seq_score_block contract) and the final
     ``dot / (na * nb)`` rounds exactly like the Catalyst expression, so
     scores are bit-identical to ``M.cosine_similarity`` on the joined
-    arrays. Corpus norms are computed once per row instead of once per
+    arrays. Corpus norms are computed once per task instead of once per
     pair — same value by determinism of the fold.
     """
-    spark = emb.sparkSession
-    pdf = emb.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
-    ).toPandas()
-    ids = pdf["id"].to_numpy(np.int64)
-    order = np.argsort(ids)
-    ids_sorted = ids[order]
-    # an empty corpus would give a 1-D (0,) array; keep (rows, dims)
-    x_mat = (
-        np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
-        if len(pdf) else np.zeros((0, 0))
-    )
-    norms = K.seq_self_norms(x_mat)
-    bc = spark.sparkContext.broadcast((ids_sorted, x_mat, norms))
+    bc = _broadcast_corpus(emb, id_col, vec_col)
     ca, cb = out_cols
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sids, xm, ns = bc.value
+        sids, xm = bc.value
+        ns = K.seq_self_norms(xm)
         d = xm.shape[1]
         for b in batches:
             a = b[ca].to_numpy(np.int64)

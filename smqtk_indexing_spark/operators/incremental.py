@@ -67,9 +67,3 @@ def count(sigs: DataFrame) -> int:
     """Index cardinality — S6 (``interfaces/nearest_neighbor_index.py:
     120-124``)."""
     return sigs.count()
-
-
-def bucket_count(buckets: DataFrame) -> int:
-    """LSH variant: sum of bucket value-set sizes — ``lsh.py:271-281``;
-    equals row-count on the exploded bucket form."""
-    return buckets.count()

@@ -112,36 +112,3 @@ def itq_hash_codes(
     return emb.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
     ).mapInPandas(gen, schema="vec_id long, itq_code long")
-
-
-def itq_hash_codes_words(
-    emb: DataFrame,
-    model: ItqModel,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Apply for bit_length > 64: (id, vector) -> (id, itq_code
-    array<long>) in kernels.bits_to_words layout — full parity with the
-    reference's arbitrary-precision codes (``utils/bits.py:4-20``; ITQ's
-    own 256-bit option, ``impls/lsh_functor/itq.py:71-78``). Hamming over
-    these codes is functions/metrics.hamming_words."""
-    spark = emb.sparkSession
-    b_model = spark.sparkContext.broadcast(
-        (model.mean, model.rotation, model.normalize)
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mean, rot, norm = b_model.value
-        for pdf in batches:
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            words = K.bits_to_words(K.itq_hash(x, mean, rot, normalize=norm))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].astype("int64"),
-                    "itq_code": list(words),
-                }
-            )
-
-    return emb.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
-    ).mapInPandas(gen, schema="vec_id long, itq_code array<long>")

@@ -81,6 +81,57 @@ def test_seq_score_block_bit_identical_to_naive_fold():
             assert np.array_equal(ref, got), (measure, m, n, d)
 
 
+def _lexsort_topk(q, qids, x, xids, k, measure):
+    # naive reference: score the full (m, n) matrix, then one np.lexsort
+    # per query over every non-self neighbor in Spark's order — NaN
+    # greatest, a zero-norm cosine NULL after every score, ties by id
+    sc = K.seq_score_block(q, x, measure)
+    null = np.zeros(sc.shape, dtype=bool)
+    if measure == "cosine":
+        den = np.outer(K.seq_self_norms(q), K.seq_self_norms(x))
+        null = den == 0
+        sc = sc / np.where(null, 1.0, den)
+    rows = []
+    for i, qi in enumerate(qids):
+        other = xids != qi
+        s, nl, ids = sc[i, other], null[i, other], xids[other]
+        nan = np.isnan(s) & ~nl
+        if measure == "cosine":
+            first = np.where(nan, 0, np.where(nl, 2, 1))
+            key = np.where(nan | nl, 0.0, -s)
+        else:
+            first = np.where(nan, 1, 0)
+            key = np.where(nan, 0.0, s)
+        for r, j in enumerate(np.lexsort((ids, key, first))[:k]):
+            rows.append((qi, ids[j], r + 1, "null" if nl[j] else repr(s[j])))
+    return rows
+
+
+@pytest.mark.parametrize("measure", ["cosine", "euclidean", "hik"])
+def test_exact_topk_kernel_matches_lexsort_reference(measure):
+    rng = np.random.default_rng(31)
+    n, d = 1100, 6  # two full 512-column tiles and a partial one
+    x = rng.integers(-3, 4, (n, d)).astype(np.float64)  # many score ties
+    x[7] = x[900]  # a duplicate row: tied against every query
+    x[11] = 0.0  # zero norm: a NULL cosine
+    x[13, 2] = np.nan  # NaN scores against every query
+    xids = rng.permutation(10 * n)[:n].astype(np.int64)  # ids not in row order
+    qi = np.r_[np.arange(0, n, 16), [7, 11, 13, 900]]  # > 64 queries
+    q, qids = x[qi], xids[qi]  # every query is also a corpus row: self pairs
+    cases = [(q, qids, x, xids, 5), (x[:9], xids[:9], x[:7], xids[:7], 10)]
+    for q_, qids_, x_, xids_, k in cases:
+        got = K.exact_topk(q_, qids_, x_, xids_, k, measure)
+        rows = [
+            (a, b, r, "null" if nl else repr(s))
+            for a, b, r, s, nl in zip(*(got[c] for c in got))
+        ]
+        assert rows == _lexsort_topk(q_, qids_, x_, xids_, k, measure)
+    # k >= n: a query in the corpus gets every other row, one outside it all
+    assert len(got["query_id"]) == 7 * 6 + 2 * 7
+    empty = K.exact_topk(q, qids, np.zeros((0, 0)), xids[:0], 5, measure)
+    assert all(len(v) == 0 for v in empty.values())
+
+
 def test_blocked_topk_matches_crossjoin_window_plan(spark, emb):
     # r07: the blocked brute-force top-k must emit EXACTLY the rowset of
     # the previous crossJoin + aggregate(zip_with) + row_number window
@@ -361,6 +412,33 @@ def test_balltree_query_batch_and_cap(spark, emb):
         balltree_topk(df, queries=df, k=3, max_query_rows=3)
 
 
+def test_balltree_matches_euclidean_with_a_nan_vector(spark):
+    # every distance from vector 0 is NaN: balltree must keep brute force's
+    # NaN scores and NaN-greatest order in all three forms (the pandas ->
+    # Arrow handoff once turned them into nulls ranked first)
+    from smqtk_indexing_spark.operators.balltree import (
+        balltree_topk,
+        balltree_topk_allpairs,
+    )
+
+    vecs = np.random.default_rng(43).standard_normal((30, 8)).astype(np.float32)
+    vecs[0, 5] = np.nan
+    df = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(30)], "vec_id long, embedding array<float>"
+    )
+
+    def rows(topk):
+        return sorted((q, n, r, str(s)) for q, n, r, s in topk.collect())
+
+    want = rows(ann.euclidean_topk(df, k=3))
+    assert any(s == "nan" for *_, s in want)
+    for nparts in (1, 7):
+        assert rows(balltree_topk(df.repartition(nparts), k=3)) == want, nparts
+    for g in (1, 2, 5):
+        assert rows(balltree_topk_allpairs(df, k=3, grid_side=g)) == want, g
+    assert rows(balltree_topk(df, queries=df, k=3)) == want
+
+
 def test_kmeans_kernel_deterministic_and_partitions():
     rng = np.random.default_rng(2)
     x = rng.standard_normal((300, 8))
@@ -372,6 +450,11 @@ def test_kmeans_kernel_deterministic_and_partitions():
     # column 0 is the true nearest centroid
     d2 = ((x[:, None, :] - c1[None, :, :]) ** 2).sum(axis=2)
     np.testing.assert_array_equal(a[:, 0], d2.argmin(axis=1))
+    # two identical centroids tie for every row: the lower index comes first
+    twin = np.vstack([c1[:3], c1[2:3], c1[3:]])
+    t = K.kmeans_assign(x, twin, nprobe=9)
+    pos2 = (t == 2).argmax(axis=1)
+    np.testing.assert_array_equal(t[np.arange(300), pos2 + 1], 3)
     with pytest.raises(ValueError, match="n_cells"):
         K.kmeans_fit(x[:4], 8)
 

@@ -52,15 +52,16 @@ def test_whitespace_ratio_vertical_tab_matches_oracle(spark):
     assert got == want == 4 / 7
 
 
-def _assert_matches_duckdb(spark, name, sf001_dir):
+def _assert_matches_duckdb(spark, name, sf_dir):
     import math
 
-    df = E.queries()[name](spark, sf001_dir)
+    df = E.queries()[name](spark, sf_dir)
     cols = [c.lower() for c in df.columns]
     rows = [tuple(r) for r in df.collect()]
     con = duckdb.connect()
     for t in ["documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf001_dir}/{t}.parquet'")
+        if os.path.exists(f"{sf_dir}/{t}.parquet"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     res = con.execute(E.oracle_sql()[name])
     ocols = [d[0].lower() for d in res.description]
     orows = res.fetchall()
@@ -85,6 +86,39 @@ def test_topk_certificates_match_duckdb_sf0001(spark, name, sf001_dir):
     # the seven top-k certificates share one body (_topk_certificate) and
     # one oracle: k rows per query, no score mismatch, no rank violation
     _assert_matches_duckdb(spark, name, sf001_dir)
+
+
+@pytest.fixture(scope="module")
+def hostile_emb_dir(tmp_path_factory):
+    # 40x16 embeddings in the testdata schema: vector 1 copies vector 2
+    # (tied scores) and vector 3 is all 1e30 (every distance from it ties)
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vecs = np.random.default_rng(41).standard_normal((40, 16)).astype(np.float32)
+    vecs[1] = vecs[2]
+    vecs[3] = 1e30
+    d = tmp_path_factory.mktemp("hostile_emb")
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(40), pa.int64()),
+            "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+            "label": pa.array([0] * 40, pa.int32()),
+        }
+    )
+    pq.write_table(table, d / "embeddings.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["ann_cosine_topk", "ann_euclidean_topk", "ann_hik_topk", "ann_balltree_topk"],
+)
+def test_exact_topk_ties_match_duckdb_on_hostile_embeddings(spark, name, hostile_emb_dir):
+    # every exact top-k keeps the oracle's (score, neighbor_id) order on
+    # exact ties; balltree's argpartition selection once kept others
+    _assert_matches_duckdb(spark, name, hostile_emb_dir)
 
 
 def _reset_memos():
